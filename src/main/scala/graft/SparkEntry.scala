@@ -3196,15 +3196,15 @@ object SparkEntry {
         |  CAST(abs((ma - mb) / sqrt(sea + seb)) > 1.96 AS INTEGER) AS sig
         |FROM c ORDER BY source""".stripMargin,
     "cep_pattern_counts" -> Events.cepOracle(),
-    "graph_pagerank_tol" -> Graph.pageRankUntilOracle(),
+    "graph_pagerank_tol" -> Graph.pageRankOracle(rounds = 12, tol = Some(0.5)),
     "graph_triangles" -> Graph.triangleOracle,
     "graph_components" -> Graph.componentsOracle(),
     "graph_bfs_hops" -> Graph.bfsOracle(),
     "graph_communities" -> Graph.labelPropagationOracle(),
     "graph_sssp" -> Graph.ssspOracle(),
     "graph_sssp_delta" -> Graph.ssspOracle(rounds = 10),
-    "graph_ppr" -> Graph.personalizedPageRankOracle(),
-    "graph_ppr_tol" -> Graph.personalizedPageRankUntilOracle(),
+    "graph_ppr" -> Graph.pageRankOracle(source = Some("s:1")),
+    "graph_ppr_tol" -> Graph.pageRankOracle(rounds = 12, source = Some("s:1"), tol = Some(0.5)),
     "graph_kcore" -> Graph.kCoreOracle(),
     "graph_clustering" -> Graph.clusteringOracle,
     "search_bm25" -> TextAnalysis.bm25OracleSql(),

@@ -64,20 +64,12 @@ object Components {
       .groupByKey(_._1)
       .flatMapGroups { (img: Int, it: Iterator[(Int, Int, Int)]) =>
         val cells = it.map(c => (c._2, c._3)).toArray
-        val n = cells.length
-        val idx = new java.util.HashMap[Long, Integer](n * 2)
+        // union-find nodes are the cells' linear ids, so the component
+        // id (min node id) is the min linear id
+        val uf = new LongUnionFind(cells.length)
+        val ids = cells.map { case (y, x) => uf.add(y.toLong * width + x) }
         var i = 0
-        while (i < n) { idx.put(cells(i)._1.toLong * width + cells(i)._2, i); i += 1 }
-        val parent = Array.tabulate(n)(identity)
-        def find(a: Int): Int = {
-          var r = a
-          while (parent(r) != r) r = parent(r)
-          var c = a
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        i = 0
-        while (i < n) {
+        while (i < cells.length) {
           val (y, x) = cells(i)
           var k = 0
           while (k < offs.length) {
@@ -86,29 +78,15 @@ object Components {
             // x must stay in [0, width): a linear id one past the row end
             // aliases the first cell of the next row
             if (nx2 >= 0 && nx2 < width) {
-              val j = idx.get((y + dy).toLong * width + nx2)
-              if (j != null) {
-                val ri = find(i); val rj = find(j.intValue())
-                if (ri < rj) parent(rj) = ri else if (rj < ri) parent(ri) = rj
-              }
+              val j = uf.indexOf((y + dy).toLong * width + nx2)
+              if (j >= 0) uf.union(ids(i), j)
             }
             k += 1
           }
           i += 1
         }
-        // component id = min linear id in the component (array order is
-        // not linear-id order, so resolve it in a second pass)
-        val minId = new Array[Long](n)
-        java.util.Arrays.fill(minId, Long.MaxValue)
-        i = 0
-        while (i < n) {
-          val lid = cells(i)._1.toLong * width + cells(i)._2
-          val r = find(i)
-          if (lid < minId(r)) minId(r) = lid
-          i += 1
-        }
         cells.indices.iterator.map(i =>
-          (img, cells(i)._1, cells(i)._2, minId(find(i))))
+          (img, cells(i)._1, cells(i)._2, uf.label(ids(i))))
       }
       .toDF("img_id", "y", "x", "component")
   }
@@ -156,7 +134,9 @@ object Components {
     // gate aggregate — count AND coordinate bounds in the same action,
     // no extra job vs the old bare count — proves every coordinate
     // fits Int (y·width then fits Long for any Int width). A zero
-    // budget (the spec escape) skips the gate action entirely.
+    // budget (the spec escape) skips the gate action entirely. A null
+    // bound (a coordinate column that is entirely null) counts as out
+    // of Int range, so such a mask stays on the iterative plan.
     val src = if (perImage) mask else {
       val m = mask.select(col("y"), col("x")).localCheckpoint()
       val budget = localEdgeBudget(mask.sparkSession)
@@ -169,9 +149,10 @@ object Components {
         val g = m.agg(count(lit(1)),
           min(col("y").cast("long")), max(col("y").cast("long")),
           min(col("x").cast("long")), max(col("x").cast("long"))).head()
+        def bound(i: Int, ok: Long => Boolean) = !g.isNullAt(i) && ok(g.getLong(i))
         val inIntRange = g.getLong(0) == 0L ||
-          (g.getLong(1) >= Int.MinValue && g.getLong(2) <= Int.MaxValue &&
-            g.getLong(3) >= Int.MinValue && g.getLong(4) <= Int.MaxValue)
+          (bound(1, _ >= Int.MinValue) && bound(2, _ <= Int.MaxValue) &&
+            bound(3, _ >= Int.MinValue) && bound(4, _ <= Int.MaxValue))
         if (g.getLong(0) <= budget && inIntRange) {
           val (yt, xt) = (m.schema("y").dataType, m.schema("x").dataType)
           return labelGrouped(m.withColumn("img_id", lit(0)), width, diagonal)
@@ -195,9 +176,8 @@ object Components {
         Window.partitionBy((imgCols ++ Seq("y", "g")).map(col): _*)))
       .select((imgCols.map(col) ++ Seq(col("y"), col("x"),
         (col("y") * width + col("run_min_x")).cast("long").as("component"))): _*)
-    var labels = resetStats(seeded.localCheckpoint())
     // one propagate-then-jump sub-round as a pure plan transform
-    def subRound(cur: DataFrame): DataFrame = {
+    propagateToFixpoint(seeded, keys, maxIters) { cur =>
       // neighbor-min propagation (J2-style shifted equality join)
       val shifted = cur.withColumn("o", explode(array(offsets.map { case (dy, dx) =>
           struct(lit(dy).as("dy"), lit(dx).as("dx")) }: _*)))
@@ -219,12 +199,22 @@ object Components {
         .select((imgCols.map(col) ++ Seq(col("y"), col("x"),
           coalesce(col("grand"), col("component")).as("component"))): _*)
     }
-    // Two sub-rounds per materialization: each checkpoint (one driver
-    // action) advances the fixpoint twice, and the convergence count —
-    // a further full job — runs once per materialization. Wall time on
-    // small masks is dominated by per-action scheduling overhead, so
-    // halving the action count roughly halves the constant factor; the
-    // shuffle volume per action is unchanged at scale.
+  }
+
+  /** The driver loop of both iterative labelers ([[label]] and
+    * [[labelGraph]]): checkpoint the seed, then materialize two
+    * `subRound`s per checkpoint and count the rows (matched on `keys`)
+    * whose `component` changed, until none did. Two sub-rounds per
+    * materialization: each checkpoint (one driver action) advances the
+    * fixpoint twice, and the convergence count — a further full job —
+    * runs once per materialization. Wall time on small inputs is
+    * dominated by per-action scheduling overhead, so halving the action
+    * count roughly halves the constant factor; the shuffle volume per
+    * action is unchanged at scale. `maxIters` counts sub-rounds and is
+    * a correctness cap: not converging within it fails loudly. */
+  private def propagateToFixpoint(seed: DataFrame, keys: Seq[String], maxIters: Int)
+                                 (subRound: DataFrame => DataFrame): DataFrame = {
+    var labels = resetStats(seed.localCheckpoint())
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -235,6 +225,7 @@ object Components {
         .filter(col("component") =!= col("prev")).count()
       labels = next
     }
+    require(changed == 0, s"connected components did not converge in $maxIters rounds")
     labels
   }
 
@@ -267,49 +258,12 @@ object Components {
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (_, it: Iterator[(Long, Long, Long)]) =>
-        val es = it.toArray
-        val idx = new java.util.HashMap[Long, Integer](es.length * 4)
-        val nodes = new scala.collection.mutable.ArrayBuffer[Long](es.length)
-        def id(x: Long): Int = {
-          val got = idx.get(x)
-          if (got != null) got.intValue()
-          else { val i = nodes.length; nodes += x; idx.put(x, i); i }
-        }
-        val pairs = es.map(e => (id(e._2), id(e._3)))
-        val parent = Array.tabulate(nodes.length)(identity)
-        def find(a: Int): Int = {
-          var r = a
-          while (parent(r) != r) r = parent(r)
-          var c = a
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        pairs.foreach { case (a, b) =>
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-        }
-        // component id = min NODE id (insertion order is not id order,
-        // so resolve in a second pass — the labelGrouped recipe)
-        val minId = Array.fill(nodes.length)(Long.MaxValue)
-        var i = 0
-        while (i < nodes.length) {
-          val r = find(i)
-          if (nodes(i) < minId(r)) minId(r) = nodes(i)
-          i += 1
-        }
-        nodes.indices.iterator.map(i => (nodes(i), minId(find(i))))
+        // groups are small and many: start the table small, it doubles
+        unionFindLong(it.map(e => (e._2, e._3)), initialNodes = 64)
       }
       .toDF("node", "component")
   }
 
-  /** Connected components over a generic EDGE LIST (u, v) — the graph
-    * twin of the grid labeler, used to resolve near-dup candidate
-    * PAIRS into duplicate clusters (LSH emits pairs; a cluster is the
-    * transitive closure). Same min-label propagation + pointer jumping
-    * as `label`: O(log d) rounds, shuffles carry (node, label) ids
-    * only. Dup clusters are near-cliques, so d is tiny and this
-    * converges in 2-3 materializations. Output: (node, component)
-    * with component = min node id in the component. */
   /** One-task union-find over a symmetric (u, v) edge relation that
     * fits the [[localEdgeBudget]] — the generic-edge-list twin of
     * [[labelGrouped]]. The edge stream is consumed INCREMENTALLY
@@ -322,57 +276,17 @@ object Components {
     val spark = sym.sparkSession
     import spark.implicits._
     val dt = sym.schema("u").dataType
-    def unionFind[T](it: Iterator[(T, T)], lt: (T, T) => Boolean): Iterator[(T, T)] = {
-      val idx = new java.util.HashMap[T, Integer](1 << 12)
-      val nodes = new scala.collection.mutable.ArrayBuffer[T]()
-      val parent = new scala.collection.mutable.ArrayBuffer[Int]()
-      def id(x: T): Int = {
-        val got = idx.get(x)
-        if (got != null) got.intValue()
-        else {
-          val i = nodes.length; nodes += x; parent += i; idx.put(x, i); i
-        }
-      }
-      def find(a: Int): Int = {
-        var r = a
-        while (parent(r) != r) r = parent(r)
-        var c = a
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      it.foreach { case (u, v) =>
-        val ra = find(id(u)); val rb = find(id(v))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      // component id = min NODE id (root index order is insertion
-      // order, not id order — resolve minima in a second pass)
-      val minAt = new Array[Int](nodes.length)
-      java.util.Arrays.fill(minAt, -1)
-      var i = 0
-      while (i < nodes.length) {
-        val r = find(i)
-        if (minAt(r) < 0 || lt(nodes(i), nodes(minAt(r)))) minAt(r) = i
-        i += 1
-      }
-      nodes.indices.iterator.map(i => (nodes(i), nodes(minAt(find(i)))))
-    }
     dt match {
       case StringType =>
-        import org.apache.spark.unsafe.types.UTF8String
         sym.select(col("u"), col("v")).as[(String, String)]
           .groupByKey(_ => 0)
-          .flatMapGroups { (_, it: Iterator[(String, String)]) =>
-            unionFind[String](it,
-              (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
-          }
+          .flatMapGroups((_, it: Iterator[(String, String)]) => unionFindString(it))
           .toDF("node", "component")
       case ByteType | ShortType | IntegerType | LongType =>
         sym.select(col("u").cast("long"), col("v").cast("long"))
           .as[(Long, Long)]
           .groupByKey(_ => 0)
-          .flatMapGroups { (_, it: Iterator[(Long, Long)]) =>
-            unionFindLong(it)
-          }
+          .flatMapGroups((_, it: Iterator[(Long, Long)]) => unionFindLong(it))
           .toDF("node", "component")
           .select(col("node").cast(dt).as("node"),
             col("component").cast(dt).as("component"))
@@ -393,47 +307,50 @@ object Components {
     case _ => false
   }
 
-  /** Long-specialized one-task union-find: open-addressed primitive
+  /** Union-find over LONG node ids: an open-addressed primitive
     * id→index table plus flat long/int arrays (~36 B/node amortized)
-    * instead of the generic branch's boxed HashMap + ArrayBuffers
-    * (~100 B/node, ADVICE r19) — at the default 8M-edge budget a
-    * worst-case ~16M-node task stays in the hundreds of MB instead of
-    * gigabytes. Same streaming consumption, same min-id labels. */
-  private def unionFindLong(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    var cap = 1 << 13
-    var ks = new Array[Long](cap)
-    var vs = new Array[Int](cap) // slot → node index, -1 = empty
-    java.util.Arrays.fill(vs, -1)
-    var nodes = new Array[Long](1 << 12)
-    var parent = new Array[Int](1 << 12)
-    var n = 0
-    def mix(x: Long): Long = {
+    * instead of a boxed HashMap + ArrayBuffers (~100 B/node, ADVICE
+    * r19) — at the default 8M-edge budget a worst-case ~16M-node task
+    * stays in the hundreds of MB instead of gigabytes. Every
+    * integral-id labeler (grid masks, group-confined and one-task edge
+    * lists) runs on this one structure. A node's label is the min node
+    * id of its component, resolved once after the last union. */
+  private final class LongUnionFind(initialNodes: Int) {
+    private var cap = Integer.highestOneBit(math.max(initialNodes, 8)) << 1
+    private var ks = new Array[Long](cap)
+    private var vs = Array.fill(cap)(-1) // slot → node index, -1 = empty
+    private var nodes = new Array[Long](cap >> 1)
+    private var parent = new Array[Int](cap >> 1)
+    private var n = 0
+    private def mix(x: Long): Long = {
       // splitmix64 finalizer — sequential ids must not cluster probes
       var h = x + 0x9e3779b97f4a7c15L
       h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
       h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
       h ^ (h >>> 31)
     }
-    def rehash(): Unit = {
-      val ncap = cap << 1
-      val nks = new Array[Long](ncap)
-      val nvs = new Array[Int](ncap)
-      java.util.Arrays.fill(nvs, -1)
-      var i = 0
-      while (i < cap) {
-        if (vs(i) >= 0) {
-          var j = (mix(ks(i)) & (ncap - 1)).toInt
-          while (nvs(j) >= 0) j = (j + 1) & (ncap - 1)
-          nks(j) = ks(i); nvs(j) = vs(i)
-        }
-        i += 1
-      }
-      cap = ncap; ks = nks; vs = nvs
-    }
-    def id(x: Long): Int = {
-      if (n * 2 >= cap) rehash() // load ≤ 0.5 keeps probe chains short
+    private def slot(x: Long): Int = {
       var i = (mix(x) & (cap - 1)).toInt
       while (vs(i) >= 0 && ks(i) != x) i = (i + 1) & (cap - 1)
+      i
+    }
+    private def rehash(): Unit = {
+      val (oks, ovs) = (ks, vs)
+      cap <<= 1
+      ks = new Array[Long](cap)
+      vs = Array.fill(cap)(-1)
+      var i = 0
+      while (i < ovs.length) {
+        if (ovs(i) >= 0) { val j = slot(oks(i)); ks(j) = oks(i); vs(j) = ovs(i) }
+        i += 1
+      }
+    }
+    /** Index of node `x`, or -1 when it was never added. */
+    def indexOf(x: Long): Int = vs(slot(x))
+    /** Index of node `x`, adding it as a singleton on first sight. */
+    def add(x: Long): Int = {
+      if (n * 2 >= cap) rehash() // load ≤ 0.5 keeps probe chains short
+      val i = slot(x)
       if (vs(i) >= 0) vs(i)
       else {
         if (n == nodes.length) {
@@ -442,6 +359,57 @@ object Components {
         }
         nodes(n) = x; parent(n) = n; ks(i) = x; vs(i) = n
         n += 1; n - 1
+      }
+    }
+    private def find(a: Int): Int = {
+      var r = a
+      while (parent(r) != r) r = parent(r)
+      var c = a
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    // component id = min NODE id (insertion order is not id order —
+    // resolve minima in one pass after the last union)
+    private lazy val minAt: Array[Int] = {
+      val m = Array.fill(n)(-1)
+      var i = 0
+      while (i < n) {
+        val r = find(i)
+        if (m(r) < 0 || nodes(i) < nodes(m(r))) m(r) = i
+        i += 1
+      }
+      m
+    }
+    def label(i: Int): Long = nodes(minAt(find(i)))
+    def labels: Iterator[(Long, Long)] = (0 until n).iterator.map(i => (nodes(i), label(i)))
+  }
+
+  /** Streams an edge list through one [[LongUnionFind]]: (node, min
+    * node id of its component) for every node seen. */
+  private def unionFindLong(it: Iterator[(Long, Long)],
+                            initialNodes: Int = 1 << 12): Iterator[(Long, Long)] = {
+    val uf = new LongUnionFind(initialNodes)
+    it.foreach { case (u, v) => uf.union(uf.add(u), uf.add(v)) }
+    uf.labels
+  }
+
+  /** The string-id union-find behind [[labelGraphLocal]]: boxed
+    * HashMap + ArrayBuffers, minima in UTF8 binary order (Spark's
+    * StringType `min`). */
+  private def unionFindString(it: Iterator[(String, String)]): Iterator[(String, String)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val idx = new java.util.HashMap[String, Integer](1 << 12)
+    val nodes = new scala.collection.mutable.ArrayBuffer[String]()
+    val parent = new scala.collection.mutable.ArrayBuffer[Int]()
+    def id(x: String): Int = {
+      val got = idx.get(x)
+      if (got != null) got.intValue()
+      else {
+        val i = nodes.length; nodes += x; parent += i; idx.put(x, i); i
       }
     }
     def find(a: Int): Int = {
@@ -455,20 +423,27 @@ object Components {
       val ra = find(id(u)); val rb = find(id(v))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    // component id = min NODE id (insertion order is not id order —
-    // resolve minima in a second pass, the generic-branch recipe)
-    val minAt = new Array[Int](n)
-    java.util.Arrays.fill(minAt, -1)
+    val minAt = Array.fill(nodes.length)(-1)
     var i = 0
-    while (i < n) {
+    while (i < nodes.length) {
       val r = find(i)
-      if (minAt(r) < 0 || nodes(i) < nodes(minAt(r))) minAt(r) = i
+      if (minAt(r) < 0 ||
+          UTF8String.fromString(nodes(i)).compareTo(UTF8String.fromString(nodes(minAt(r)))) < 0)
+        minAt(r) = i
       i += 1
     }
-    val total = n
-    (0 until total).iterator.map(i => (nodes(i), nodes(minAt(find(i)))))
+    nodes.indices.iterator.map(i => (nodes(i), nodes(minAt(find(i)))))
   }
 
+  /** Connected components over a generic EDGE LIST (u, v) — the graph
+    * twin of the grid labeler, used to resolve near-dup candidate
+    * PAIRS into duplicate clusters (LSH emits pairs; a cluster is the
+    * transitive closure) and by [[Graph.connectedComponents]] past its
+    * one-task budget. Same min-label propagation + pointer jumping
+    * as `label`: O(log d) rounds, shuffles carry (node, label) ids
+    * only. Dup clusters are near-cliques, so d is tiny and this
+    * converges in 2-3 materializations. Output: (node, component)
+    * with component = min node id in the component. */
   def labelGraph(edges: DataFrame, maxIters: Int = 32): DataFrame = {
     val sym = edges.select(col("u"), col("v"))
       .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
@@ -484,10 +459,9 @@ object Components {
     if (budget > 0L && supportsLocalIds(sym.schema("u").dataType) &&
         sym.count() <= budget)
       return labelGraphLocal(sym)
-    var labels = resetStats(
-      sym.select(col("u").as("node")).distinct()
-        .withColumn("component", col("node")).localCheckpoint())
-    def subRound(cur: DataFrame): DataFrame = {
+    val seed = sym.select(col("u").as("node")).distinct()
+      .withColumn("component", col("node"))
+    propagateToFixpoint(seed, Seq("node"), maxIters) { cur =>
       // neighbor-min: every node offers its label to each neighbor
       val offered = sym.join(cur.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node"), col("component"))
@@ -500,17 +474,6 @@ object Components {
         .select(col("node"),
           coalesce(col("grand"), col("component")).as("component"))
     }
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      iter += 2
-      val next = resetStats(subRound(subRound(labels)).localCheckpoint())
-      changed = next
-        .join(labels.select(col("node"), col("component").as("prev")), Seq("node"))
-        .filter(col("component") =!= col("prev")).count()
-      labels = next
-    }
-    labels
   }
 
   /** 3-D connected components over a (z, y, x) voxel mask — the

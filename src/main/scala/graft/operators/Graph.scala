@@ -145,23 +145,6 @@ object Graph {
     spark.conf.getOption("graft.graph.stateBroadcastMaxRows")
       .map(_.toLong).getOrElse(50000L)
 
-  /** Round-19 A/B knob (`graft.graph.persistEdges`): when true, the
-    * FIXED-ROUND Pregel loops (pageRank/bfsHops/ssspOn — the rows
-    * measured at 8.2-8.5x on the 10x->100x decade, vs 3.7-4.7x for
-    * their tolerance-exit twins) localCheckpoint the edge relation
-    * once so every round reads local shuffle blocks instead of
-    * re-decoding the bucketed parquet scan per round. localCheckpoint
-    * preserves the reported hash partitioning (the pageRankUntil
-    * precedent, pinned by PlanContractSpec), so the per-round join
-    * stays zero-exchange on the edge side either way — the A/B
-    * isolates pure re-scan/decode cost. Default false = the shipped
-    * bucketed-scan-per-round plan; GraphPregelAbProbe measures both
-    * at 10x/100x before this ships as a default. */
-  private[graft] def persistEdges(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.graph.persistEdges").exists(_.toBoolean)
-  private def roundEdges(df: DataFrame): DataFrame =
-    if (persistEdges(df.sparkSession)) df.localCheckpoint() else df
-
   /** The state side of a Pregel round join: broadcast while the known
     * row bound fits the budget, SHUFFLE_MERGE-hinted (→ the measured
     * zero-exchange SMJ against the bucketed edge scan) once it does
@@ -252,236 +235,154 @@ object Graph {
   private[graft] def hitsEdgesRel(spark: SparkSession, dir: String): DataFrame =
     hitsRel(spark, dir)
 
-  /** PageRank over the part↔supplier graph, `iters` synchronous
-    * iterations at damping 0.85. Every node has degree ≥ 1 by
-    * construction (it appears via an edge), so there is no dangling
-    * mass and Σ pr = 1 is invariant. Output is normalized to mean 1
-    * (`pr · N`) and rounded so cross-engine summation-order noise
-    * (~1e-15) cannot flip the hash compare.
+  /** PageRank over the part↔supplier graph at damping 0.85 — the one
+    * round loop behind all four PageRank queries. Every node has
+    * degree ≥ 1 by construction (it appears via an edge), so there is
+    * no dangling mass.
     *
-    * The single driver-side value is N (one scalar count — the same
-    * bounded-pull contract as Ellipse's shape gate); everything else
-    * stays relational. */
-  def pageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    // bucketed-by-`a` catalog table: every per-round join reads the
-    // edge side with NO exchange; the state side (one row per node)
-    // broadcasts below the row budget, shuffles above it (stateSide);
-    // roundEdges optionally pins the scan to local blocks (A/B knob)
-    val linked = roundEdges(bipartiteLinked(spark, dir))
-    val n = bipartiteNodeCount(spark, dir)
-    val teleport = lit(0.15).cast("double") / lit(n.toDouble)
-    var pr = linked.select(col("a").as("node")).distinct()
-      .withColumn("pr", lit(1.0).cast("double") / lit(n.toDouble))
-    for (_ <- 1 to iters) {
-      pr = linked.join(stateSide(pr, n), linked("a") === pr("node"))
-        .groupBy(col("b"))
-        .agg((teleport + lit(0.85) * sum(col("pr") / col("deg"))).as("pr"))
-        .select(col("b").as("node"), col("pr"))
-    }
-    pr.select(col("node"), round(col("pr") * lit(n.toDouble), 6).as("pr_norm"))
-      .orderBy("node")
-  }
-
-  /** PageRank with tolerance-based early exit — the cluster-scale
-    * driver the fixed-count variant documents as missing: iterate
-    * until the L1 delta between successive vectors drops below `tol`
-    * (or `maxIters`), the same changed-ratio discipline as
-    * `HMRF.segment`. The STOPPING RULE IS PART OF THE QUERY
-    * SEMANTICS: the oracle unrolls the same rounds, computes the same
-    * per-round L1 deltas, and self-selects the same exit round — the
-    * gate verifies the exit logic, not just a pinned vector, and
-    * survives testdata regeneration that shifts the exit round.
+    *  - `source = None`: global PageRank, restart mass 0.15/N spread
+    *    uniformly, Σ pr = 1 invariant. Output `pr_norm` = pr · N
+    *    (mean 1).
+    *  - `source = Some(s)`: personalized PageRank — the restart mass
+    *    concentrates at `s`, so the vector measures proximity to the
+    *    source (the "related items" primitive). Output `ppr`; nodes the
+    *    walk has not reached carry exact 0.0.
+    *
+    * Both are rounded to 6 decimals so cross-engine summation-order
+    * noise (~1e-15) cannot flip the hash compare.
+    *
+    *  - `tol = None`: exactly `rounds` synchronous rounds, built as ONE
+    *    lazy plan.
+    *  - `tol = Some(t)`: tolerance early exit — iterate until the L1
+    *    delta between successive vectors drops below `t` (or `rounds`),
+    *    the same changed-ratio discipline as `HMRF.segment`. The
+    *    STOPPING RULE IS PART OF THE QUERY SEMANTICS: the oracle
+    *    unrolls the same rounds, computes the same per-round L1 deltas
+    *    and self-selects the same exit round, so the gate verifies the
+    *    exit logic, not just a pinned vector. Each round costs one
+    *    checkpoint plus ONE scalar action (the delta sum).
     *
     * Measured on this corpus (BASELINE.md round 9): the per-round L1
     * contraction is exactly the damping factor 0.85 — |λ₂| = 1,
-    * because the part↔supplier graph is bipartite (period-2 walk,
-    * eigenvalue −1; the graph itself is connected) — so meaningful
-    * tolerances cost MORE rounds
-    * than the pinned-5 rung, not fewer. On production graphs
-    * (connected, aperiodic: λ₂ < 1) the same driver exits early; the
-    * default tol=0.5 is a ranking-stability budget (top-k order
-    * stabilizes long before point convergence) that exits at round 8
-    * here, 4 under the 12-round budget.
+    * because the part↔supplier graph is bipartite (period-2 walk) — so
+    * meaningful tolerances cost MORE rounds than the pinned-5 rung. On
+    * production graphs (aperiodic: λ₂ < 1) the same driver exits early;
+    * the default tol=0.5 is a ranking-stability budget that exits at
+    * round 8 (global) / 9 (personalized) under the 12-round budget.
     *
-    * Per-round cost adds ONE scalar action (the delta sum over the
-    * checkpointed node relation) — the same bounded-pull contract as
-    * the N count. */
-  def pageRankUntil(spark: SparkSession, dir: String, tol: Double = 0.5,
-                    maxIters: Int = 12): DataFrame = {
-    // the tolerance loop runs ONE ACTION PER ROUND (the delta pull), so
-    // each round would re-scan the edge parquet; one localCheckpoint of
-    // the (already derive-free) bucketed scan keeps rounds on local
-    // blocks. The round join routes the NODE-STATE side through
-    // stateSide — broadcast below the row budget (measured fastest:
-    // 4.4 s vs the planner's default edge-broadcast 7.8 s, BASELINE.md
-    // round 10), plain above it so a broadcast-exceeding graph
-    // degrades to the zero-exchange SMJ the bucketed layout provides
-    // (raw+SMJ measured 5.0 s, the 100 TB shape).
-    val linked = bipartiteLinked(spark, dir).localCheckpoint()
+    * Scale: each round is one equality join on the source vertex + one
+    * hash aggregation on the destination. The edge side is the
+    * bucketed-by-`a` catalog table, read with NO exchange; the node
+    * state side goes through [[stateSide]] — broadcast below the row
+    * budget (measured fastest: 4.4 s vs the planner's default
+    * edge-broadcast 7.8 s, BASELINE.md round 10), the zero-exchange SMJ
+    * above it. The single driver-side value besides the deltas is N
+    * (one memoized scalar count). */
+  private def pageRankRounds(spark: SparkSession, dir: String, source: Option[String],
+                             rounds: Int, tol: Option[Double]): DataFrame = {
+    // the tolerance loop runs one action per round, so its edge scan is
+    // checkpointed once and every round reads local blocks
+    val linked = if (tol.isDefined) bipartiteLinked(spark, dir).localCheckpoint()
+      else bipartiteLinked(spark, dir)
     val n = bipartiteNodeCount(spark, dir)
-    val teleport = lit(0.15).cast("double") / lit(n.toDouble)
-    var pr = linked.select(col("a").as("node")).distinct()
-      .withColumn("pr", lit(1.0).cast("double") / lit(n.toDouble))
-      .localCheckpoint()
-    var iter = 0
-    var done = false
-    while (iter < maxIters && !done) {
-      iter += 1
-      // the previous value rides the checkpointed round relation (one
-      // extra narrow column), so the per-round L1 delta is a plain
-      // local-scan aggregate instead of a second join job — same
-      // arithmetic over the same rows (every node appears on both
-      // sides of the symmetric graph), half the per-round actions
-      val next = linked.join(stateSide(pr, n), linked("a") === pr("node"))
-        .groupBy(col("b"))
-        .agg((teleport + lit(0.85) * sum(col("pr") / col("deg"))).as("pr"))
-        .select(col("b").as("node"), col("pr"))
-        .join(pr.select(col("node"), col("pr").as("prev")), "node")
-        .localCheckpoint()
-      val delta = next.agg(sum(abs(col("pr") - col("prev")))).head().getDouble(0)
-      pr = next.select("node", "pr")
-      if (delta < tol) done = true
+    val (init, restart) = source match {
+      case None =>
+        (lit(1.0).cast("double") / lit(n.toDouble),
+          (_: Column) => lit(0.15).cast("double") / lit(n.toDouble))
+      case Some(s) =>
+        (when(col("node") === s, lit(1.0)).otherwise(lit(0.0)).cast("double"),
+          (b: Column) => when(b === s, lit(0.15)).otherwise(lit(0.0)))
     }
-    pr.select(col("node"), round(col("pr") * lit(n.toDouble), 6).as("pr_norm"))
-      .orderBy("node")
-  }
-
-  /** Oracle SQL for [[pageRankUntil]]: unrolls `maxIters` rounds,
-    * computes every successive L1 delta, and picks the FIRST round
-    * below `tol` (falling back to `maxIters`) — verifying the early
-    * exit rule itself. Deltas sit well away from the threshold
-    * (geometric 0.85 contraction), so cross-engine summation-order
-    * noise (~1e-15) cannot flip the selected round. */
-  def pageRankUntilOracle(tol: Double = 0.5, maxIters: Int = 12): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
-    sb ++= "deg AS MATERIALIZED (SELECT a, count(*) AS deg FROM edges GROUP BY a),\n"
-    sb ++= "nn AS (SELECT count(*) AS n FROM deg),\n"
-    sb ++= "pr0 AS MATERIALIZED (SELECT a AS node, CAST(1.0 AS DOUBLE)/(SELECT n FROM nn) AS pr FROM deg),\n"
-    for (i <- 1 to maxIters)
-      sb ++= s"pr$i AS MATERIALIZED (SELECT e.b AS node, CAST(0.15 AS DOUBLE)/(SELECT n FROM nn) + CAST(0.85 AS DOUBLE)*sum(p.pr/d.deg) AS pr " +
-        s"FROM edges e JOIN pr${i - 1} p ON e.a = p.node JOIN deg d ON e.a = d.a GROUP BY e.b),\n"
-    sb ++= "rounds AS MATERIALIZED (" +
-      (0 to maxIters).map(i => s"SELECT $i AS t, node, pr FROM pr$i").mkString(" UNION ALL ") + "),\n"
-    sb ++= "deltas AS (SELECT c.t, sum(abs(c.pr - p.pr)) AS d FROM rounds c " +
-      "JOIN rounds p ON p.t = c.t - 1 AND p.node = c.node WHERE c.t >= 1 GROUP BY c.t),\n"
-    sb ++= s"pick AS (SELECT coalesce(min(t), $maxIters) AS t FROM deltas WHERE d < CAST($tol AS DOUBLE))\n"
-    sb ++= "SELECT r.node, round(r.pr*(SELECT n FROM nn), 6) AS pr_norm " +
-      "FROM rounds r JOIN pick k ON r.t = k.t ORDER BY r.node"
-    sb.toString
-  }
-
-  /** Personalized PageRank — the restart mass concentrates at ONE
-    * source node instead of spreading uniformly, so the stationary
-    * vector measures proximity to the source (the "related items"
-    * primitive: PPR from a part ranks the suppliers/parts most
-    * connected to it through co-purchase structure). Same synchronous
-    * join+aggregate rounds as [[pageRank]], same float discipline
-    * (summation-order noise is ~1e-15; the 6-decimal rounding both
-    * engines apply cannot flip), teleport applied as a CASE on the
-    * aggregated node. Nodes the walk has not reached carry exact 0.0.
-    *
-    * Scale: identical per-round shape to pageRank — one equality join
-    * on the checkpointed edge relation + one aggregate; the
-    * personalization changes only a literal, which is the point:
-    * serving PPR for many sources batches as one plan with a source
-    * column added to the state relation. */
-  def personalizedPageRank(spark: SparkSession, dir: String,
-                           source: String = "s:1", iters: Int = 5): DataFrame = {
-    val linked = bipartiteLinked(spark, dir)
-    val n = bipartiteNodeCount(spark, dir)
-    var pr = linked.select(col("a").as("node")).distinct()
-      .withColumn("pr",
-        when(col("node") === source, lit(1.0)).otherwise(lit(0.0)).cast("double"))
-    for (_ <- 1 to iters) {
-      pr = linked.join(stateSide(pr, n), linked("a") === pr("node"))
+    def step(pr: DataFrame): DataFrame =
+      linked.join(stateSide(pr, n), linked("a") === pr("node"))
         .groupBy(col("b"))
         .agg((lit(0.85) * sum(col("pr") / col("deg"))).as("flow"))
-        .select(col("b").as("node"),
-          (col("flow") +
-            when(col("b") === source, lit(0.15)).otherwise(lit(0.0))).as("pr"))
+        .select(col("b").as("node"), (col("flow") + restart(col("b"))).as("pr"))
+    var pr = linked.select(col("a").as("node")).distinct().withColumn("pr", init)
+    tol match {
+      case None => for (_ <- 1 to rounds) pr = step(pr)
+      case Some(t) =>
+        pr = pr.localCheckpoint()
+        var iter = 0
+        var done = false
+        while (iter < rounds && !done) {
+          iter += 1
+          // the previous value rides the checkpointed round relation (one
+          // extra narrow column), so the per-round L1 delta is a plain
+          // local-scan aggregate instead of a second join job
+          val next = step(pr)
+            .join(pr.select(col("node"), col("pr").as("prev")), "node")
+            .localCheckpoint()
+          done = next.agg(sum(abs(col("pr") - col("prev")))).head().getDouble(0) < t
+          pr = next.select("node", "pr")
+        }
     }
-    pr.select(col("node"), round(col("pr"), 6).as("ppr"))
-      .orderBy("node")
+    val out = if (source.isEmpty) round(col("pr") * lit(n.toDouble), 6).as("pr_norm")
+      else round(col("pr"), 6).as("ppr")
+    pr.select(col("node"), out).orderBy("node")
   }
 
-  /** Oracle SQL for `personalizedPageRank` — the unrolled-rounds form
-    * of [[pageRankOracle]] with the teleport CASE'd onto the source. */
-  /** PPR with the same tolerance-based early exit (and the same
-    * self-selecting oracle) as [[pageRankUntil]] — identical L1
-    * contraction on this corpus (exactly 0.85/round), exits at round
-    * 9 under the default tol=0.5 with a 0.037 threshold margin. */
+  def pageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
+    pageRankRounds(spark, dir, None, iters, None)
+
+  def pageRankUntil(spark: SparkSession, dir: String, tol: Double = 0.5,
+                    maxIters: Int = 12): DataFrame =
+    pageRankRounds(spark, dir, None, maxIters, Some(tol))
+
+  def personalizedPageRank(spark: SparkSession, dir: String,
+                           source: String = "s:1", iters: Int = 5): DataFrame =
+    pageRankRounds(spark, dir, Some(source), iters, None)
+
   def personalizedPageRankUntil(spark: SparkSession, dir: String,
                                 source: String = "s:1", tol: Double = 0.5,
-                                maxIters: Int = 12): DataFrame = {
-    // action-per-round loop: checkpoint the bucketed scan once and
-    // route the node-state side through stateSide (see pageRankUntil)
-    val linked = bipartiteLinked(spark, dir).localCheckpoint()
-    val n = bipartiteNodeCount(spark, dir)
-    var pr = linked.select(col("a").as("node")).distinct()
-      .withColumn("pr",
-        when(col("node") === source, lit(1.0)).otherwise(lit(0.0)).cast("double"))
-      .localCheckpoint()
-    var iter = 0
-    var done = false
-    while (iter < maxIters && !done) {
-      iter += 1
-      // prev rides the checkpointed round relation — see pageRankUntil
-      val next = linked.join(stateSide(pr, n), linked("a") === pr("node"))
-        .groupBy(col("b"))
-        .agg((lit(0.85) * sum(col("pr") / col("deg"))).as("flow"))
-        .select(col("b").as("node"),
-          (col("flow") +
-            when(col("b") === source, lit(0.15)).otherwise(lit(0.0))).as("pr"))
-        .join(pr.select(col("node"), col("pr").as("prev")), "node")
-        .localCheckpoint()
-      val delta = next.agg(sum(abs(col("pr") - col("prev")))).head().getDouble(0)
-      pr = next.select("node", "pr")
-      if (delta < tol) done = true
+                                maxIters: Int = 12): DataFrame =
+    pageRankRounds(spark, dir, Some(source), maxIters, Some(tol))
+
+  /** Oracle SQL for [[pageRankRounds]] (all four PageRank queries): the
+    * iteration unrolled into one MATERIALIZED CTE per round (DuckDB
+    * inlines plain CTEs, and pr{i} is referenced per-edge, so the
+    * un-materialized plan grows exponentially in rounds). With `tol`
+    * it computes every successive L1 delta and picks the FIRST round
+    * below `tol` (falling back to `rounds`) — verifying the early exit
+    * rule itself. Deltas sit well away from the threshold (geometric
+    * 0.85 contraction), so cross-engine summation-order noise (~1e-15)
+    * cannot flip the selected round. */
+  def pageRankOracle(rounds: Int = 5, source: Option[String] = None,
+                     tol: Option[Double] = None): String = {
+    val (init, restart, out) = source match {
+      case None => ("CAST(1.0 AS DOUBLE)/(SELECT n FROM nn)",
+        "CAST(0.15 AS DOUBLE)/(SELECT n FROM nn)", "round(pr*(SELECT n FROM nn), 6) AS pr_norm")
+      case Some(s) => (s"CASE WHEN a = '$s' THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END",
+        s"CASE WHEN e.b = '$s' THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END", "round(pr, 6) AS ppr")
     }
-    pr.select(col("node"), round(col("pr"), 6).as("ppr"))
-      .orderBy("node")
-  }
-
-  /** Oracle SQL for [[personalizedPageRankUntil]] — the self-selecting
-    * round-pick of [[pageRankUntilOracle]] with the source-CASE'd
-    * teleport. */
-  def personalizedPageRankUntilOracle(source: String = "s:1", tol: Double = 0.5,
-                                      maxIters: Int = 12): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte())
     sb ++= "deg AS MATERIALIZED (SELECT a, count(*) AS deg FROM edges GROUP BY a),\n"
-    sb ++= s"pr0 AS MATERIALIZED (SELECT a AS node, CASE WHEN a = '$source' THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS pr FROM deg),\n"
-    for (i <- 1 to maxIters)
-      sb ++= s"pr$i AS MATERIALIZED (SELECT e.b AS node, " +
-        s"CAST(0.85 AS DOUBLE)*sum(p.pr/d.deg) + CASE WHEN e.b = '$source' THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS pr " +
-        s"FROM edges e JOIN pr${i - 1} p ON e.a = p.node JOIN deg d ON e.a = d.a GROUP BY e.b),\n"
-    sb ++= "rounds AS MATERIALIZED (" +
-      (0 to maxIters).map(i => s"SELECT $i AS t, node, pr FROM pr$i").mkString(" UNION ALL ") + "),\n"
-    sb ++= "deltas AS (SELECT c.t, sum(abs(c.pr - p.pr)) AS d FROM rounds c " +
-      "JOIN rounds p ON p.t = c.t - 1 AND p.node = c.node WHERE c.t >= 1 GROUP BY c.t),\n"
-    sb ++= s"pick AS (SELECT coalesce(min(t), $maxIters) AS t FROM deltas WHERE d < CAST($tol AS DOUBLE))\n"
-    sb ++= "SELECT r.node, round(r.pr, 6) AS ppr " +
-      "FROM rounds r JOIN pick k ON r.t = k.t ORDER BY r.node"
+    sb ++= "nn AS (SELECT count(*) AS n FROM deg),\n"
+    sb ++= s"pr0 AS MATERIALIZED (SELECT a AS node, $init AS pr FROM deg)"
+    for (i <- 1 to rounds)
+      sb ++= s",\npr$i AS MATERIALIZED (SELECT e.b AS node, CAST(0.85 AS DOUBLE)*sum(p.pr/d.deg) + $restart AS pr " +
+        s"FROM edges e JOIN pr${i - 1} p ON e.a = p.node JOIN deg d ON e.a = d.a GROUP BY e.b)"
+    tol match {
+      case None => sb ++= s"\nSELECT node, $out FROM pr$rounds ORDER BY node"
+      case Some(t) =>
+        sb ++= ",\nrounds AS MATERIALIZED (" +
+          (0 to rounds).map(i => s"SELECT $i AS t, node, pr FROM pr$i").mkString(" UNION ALL ") + "),\n"
+        sb ++= "deltas AS (SELECT c.t, sum(abs(c.pr - p.pr)) AS d FROM rounds c " +
+          "JOIN rounds p ON p.t = c.t - 1 AND p.node = c.node WHERE c.t >= 1 GROUP BY c.t),\n"
+        sb ++= s"pick AS (SELECT coalesce(min(t), $rounds) AS t FROM deltas WHERE d < CAST($t AS DOUBLE))\n"
+        sb ++= s"SELECT node, $out FROM rounds r JOIN pick k ON r.t = k.t ORDER BY node"
+    }
     sb.toString
   }
 
-  def personalizedPageRankOracle(source: String = "s:1", iters: Int = 5): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
-    sb ++= "deg AS MATERIALIZED (SELECT a, count(*) AS deg FROM edges GROUP BY a),\n"
-    sb ++= s"pr0 AS MATERIALIZED (SELECT a AS node, CASE WHEN a = '$source' THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS pr FROM deg),\n"
-    for (i <- 1 to iters)
-      sb ++= s"pr$i AS MATERIALIZED (SELECT e.b AS node, " +
-        s"CAST(0.85 AS DOUBLE)*sum(p.pr/d.deg) + CASE WHEN e.b = '$source' THEN CAST(0.15 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS pr " +
-        s"FROM edges e JOIN pr${i - 1} p ON e.a = p.node JOIN deg d ON e.a = d.a GROUP BY e.b),\n"
-    sb ++= s"fin AS (SELECT node, round(pr, 6) AS ppr FROM pr$iters)\n"
-    sb ++= "SELECT node, ppr FROM fin ORDER BY node"
-    sb.toString
-  }
+  /** The `base`/`edges` CTE preamble every part↔supplier graph oracle
+    * opens with: the distinct (p:partkey, s:suppkey) pairs — md5-sampled
+    * on the order key below `cutoff` for the sparse CC/LPA/k-core
+    * graphs, mirroring [[sparseEdges]] — symmetrized into `name`. */
+  private def edgesCte(name: String = "edges", cutoff: Option[String] = None): String =
+    "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem" +
+      cutoff.fold("")(c => s"\n  WHERE substring(md5('cc:' || CAST(l_orderkey AS VARCHAR)), 1, 2) < '$c'") +
+      s"),\n$name AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
 
   /** Lower-(degree, id) endpoint first — the orientation that makes
     * every triangle counted exactly once and bounds out-degrees. */
@@ -559,59 +460,32 @@ object Graph {
     oriented.agg(count(lit(1)).as("n_edges")).crossJoin(tri)
   }
 
-  /** Connected components by min-label propagation over a sparsified
-    * part↔supplier graph (edges kept iff md5 of the lineitem order key
-    * lands in the low 1/32 of hash space — dense TPC-H bipartite
-    * graphs are one giant component; the sparse graph has real
-    * structure to find). Labels converge to the component's minimum
-    * node id.
+  /** Connected components over a sparsified part↔supplier graph
+    * (edges kept iff md5 of the lineitem order key lands in the low
+    * 1/32 of hash space — dense TPC-H bipartite graphs are one giant
+    * component; the sparse graph has real structure to find). Labels
+    * are the component's minimum node id.
     *
-    * Scale notes: each round is one equality join + one min-aggregate
-    * on a localCheckpoint'ed edge relation — the same
-    * Pregel-as-relational shape as pageRank. Rounds needed = the
-    * longest shortest-path from a component's min-id node (≤ diameter);
-    * the loop stops on a CONVERGENCE count (one scalar per round, the
-    * bounded-pull contract), not a fixed round count, so small-world
-    * corpora stop in O(log n)-ish rounds while the oracle unrolls a
-    * fixed safe bound (extra rounds are idempotent after convergence —
-    * GraphSpec pins true components on a hand graph; `maxIters` is an
-    * assertion-failure guard, not a tuning knob). */
+    * At or under [[Components.localEdgeBudget]] the whole closure runs
+    * as ONE union-find task; the gate count is memoized per catalog
+    * table (ADVICE r19), so repeated calls pay no per-call scan. Past
+    * the budget the edges go to [[Components.labelGraph]]'s O(log d)
+    * propagate-and-jump rounds — the 100 TB plan — which stop on a
+    * counted convergence and fail loudly past `maxIters` sub-rounds.
+    * GraphSpec pins the same components on a hand graph both ways. The
+    * oracle unrolls plain min-label rounds to a fixed safe bound
+    * (extra rounds are idempotent after convergence). */
   def connectedComponents(spark: SparkSession, dir: String,
                           maxIters: Int = 20): DataFrame = {
-    val edges = sparseEdges(spark, dir, "08")
-    // one-task union-find fast path (round 19): the sparse edge
-    // relation is already symmetric, so at or under the
-    // Components.localEdgeBudget the whole closure runs as ONE task
-    // (labels = min node id per component, identical to the converged
-    // min-label loop below — GraphSpec pins the hand graph either
-    // way). The gate count is memoized per catalog table (round 20,
-    // ADVICE r19) so repeated calls — and the over-budget path — pay
-    // no per-call scan; past the budget the iterative rounds — the
-    // 100 TB plan — are unchanged.
-    if (sparseEdgeCount(spark, dir, "08") <=
-        graft.operators.Components.localEdgeBudget(spark))
-      return graft.operators.Components.labelGraphLocal(
-          edges.select(col("a").as("u"), col("b").as("v")))
-        .select(col("node"), col("component")).orderBy("node")
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIters) {
-      round += 1
-      val next = edges.join(labels, edges("a") === labels("node"))
-        .groupBy(col("b"))
-        .agg(min(col("lbl")).as("nlbl"))
-        .join(labels, col("b") === labels("node"))
-        .select(col("node"), least(col("lbl"), col("nlbl")).as("lbl"))
-        .localCheckpoint()
-      converged = next.join(labels.withColumnRenamed("lbl", "old"), "node")
-        .filter(col("lbl") =!= col("old")).isEmpty
-      labels = next
-    }
-    require(converged, s"CC did not converge in $maxIters rounds")
-    labels.select(col("node"), col("lbl").as("component")).orderBy("node")
+    val edges = sparseEdges(spark, dir, "08").select(col("a").as("u"), col("b").as("v"))
+    val labels =
+      if (sparseEdgeCount(spark, dir, "08") <= Components.localEdgeBudget(spark))
+        Components.labelGraphLocal(edges)
+      // labelGraph symmetrizes its input: the a < b half of the
+      // symmetric relation (no self-loops: p: and s: ids never meet)
+      // rebuilds exactly the same edges
+      else Components.labelGraph(edges.filter(col("u") < col("v")), maxIters)
+    labels.select(col("node"), col("component")).orderBy("node")
   }
 
   /** Synchronous label propagation over a symmetric edge relation,
@@ -709,10 +583,7 @@ object Graph {
     * rounds (idempotent past the fixpoint; the Spark side asserts
     * convergence within the bound). */
   def kCoreOracle(kk: Int = 3, iters: Int = kCoreUnrollRounds): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem\n"
-    sb ++= "  WHERE substring(md5('cc:' || CAST(l_orderkey AS VARCHAR)), 1, 2) < '10'),\n"
-    sb ++= "e0 AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte("e0", Some("10")))
     for (i <- 1 to iters) {
       sb ++= s"k$i AS MATERIALIZED (SELECT a FROM e${i - 1} GROUP BY a HAVING count(*) >= $kk),\n"
       sb ++= s"e$i AS MATERIALIZED (SELECT e.a, e.b FROM e${i - 1} e JOIN k$i x ON e.a = x.a JOIN k$i y ON e.b = y.a),\n"
@@ -737,7 +608,7 @@ object Graph {
     * relax-everything at the same fixed bound, measured at sf0.1). */
   def bfsHops(spark: SparkSession, dir: String, source: String = "s:1",
               hops: Int = 4): DataFrame = {
-    val edges = roundEdges(bipartiteEdges(spark, dir))
+    val edges = bipartiteEdges(spark, dir)
     var dist = spark.createDataFrame(Seq(Tuple2(source, 0)))
       .toDF("node", "hops")
     var frontier = dist
@@ -764,10 +635,7 @@ object Graph {
     * Spark side converged in ≤ iters rounds (it asserts so): rounds
     * past convergence are idempotent. */
   def componentsOracle(iters: Int = 20): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem\n"
-    sb ++= "  WHERE substring(md5('cc:' || CAST(l_orderkey AS VARCHAR)), 1, 2) < '08'),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte(cutoff = Some("08")))
     sb ++= "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS lbl FROM edges),\n"
     for (i <- 1 to iters)
       sb ++= s"l$i AS MATERIALIZED (SELECT p.node, least(p.lbl, min(q.lbl)) AS lbl " +
@@ -802,9 +670,8 @@ object Graph {
     * scale the move is delta-stepping (bucketed priority relaxation);
     * the per-round shape is unchanged: one equality join on the edge
     * key + one min-aggregate, edges checkpointed once. */
-  def ssspOn(edges0: DataFrame, source: String, rounds: Int = 4): DataFrame = {
-    val spark = edges0.sparkSession
-    val edges = roundEdges(edges0)
+  def ssspOn(edges: DataFrame, source: String, rounds: Int = 4): DataFrame = {
+    val spark = edges.sparkSession
     var dist = spark.createDataFrame(Seq(Tuple2(source, 0L)))
       .toDF("node", "dist")
     for (_ <- 1 to rounds) {
@@ -921,9 +788,7 @@ object Graph {
   /** Oracle SQL for `sssp` — weighted relaxation unrolled to the same
     * fixed bound, weights re-derived from the identical md5 formula. */
   def ssspOracle(source: String = "s:1", rounds: Int = 4): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "sym AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte("sym"))
     sb ++= "edges AS MATERIALIZED (SELECT a, b, " +
       "('0x' || substr(md5('w:' || least(a, b) || '|' || greatest(a, b)), 1, 2))::BIGINT % 9 + 1 AS w FROM sym),\n"
     sb ++= s"d0 AS MATERIALIZED (SELECT '$source' AS node, CAST(0 AS BIGINT) AS dist),\n"
@@ -941,10 +806,7 @@ object Graph {
     * unrolled (MATERIALIZED, the BPE-oracle lesson) with the same
     * (count DESC, label ASC) argmax per node. */
   def labelPropagationOracle(rounds: Int = 4): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem\n"
-    sb ++= "  WHERE substring(md5('cc:' || CAST(l_orderkey AS VARCHAR)), 1, 2) < '08'),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte(cutoff = Some("08")))
     sb ++= "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS lbl FROM edges),\n"
     for (i <- 1 to rounds)
       sb ++= s"l$i AS MATERIALIZED (SELECT node, lbl FROM (" +
@@ -959,9 +821,7 @@ object Graph {
   /** Oracle SQL for `bfsHops` — unit-weight relaxation unrolled to the
     * same fixed bound. */
   def bfsOracle(source: String = "s:1", hops: Int = 4): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
+    val sb = new StringBuilder(edgesCte())
     sb ++= s"d0 AS MATERIALIZED (SELECT '$source' AS node, 0 AS hops),\n"
     for (i <- 1 to hops)
       sb ++= s"d$i AS MATERIALIZED (SELECT node, CAST(min(hops) AS INTEGER) AS hops FROM (" +
@@ -970,25 +830,6 @@ object Graph {
         ") GROUP BY node),\n"
     sb ++= s"fin AS (SELECT node, hops FROM d$hops)\n"
     sb ++= "SELECT node, hops FROM fin ORDER BY node"
-    sb.toString
-  }
-
-  /** Oracle SQL for `pageRank` — the iteration unrolled into one
-    * MATERIALIZED CTE per round (same move as the BPE oracle: DuckDB
-    * inlines plain CTEs, and pr{i} is referenced per-edge, so the
-    * un-materialized plan grows exponentially in rounds). */
-  def pageRankOracle(iters: Int = 5): String = {
-    val sb = new StringBuilder
-    sb ++= "WITH base AS MATERIALIZED (SELECT DISTINCT 'p:' || l_partkey AS a, 's:' || l_suppkey AS b FROM lineitem),\n"
-    sb ++= "edges AS MATERIALIZED (SELECT a, b FROM base UNION ALL SELECT b AS a, a AS b FROM base),\n"
-    sb ++= "deg AS MATERIALIZED (SELECT a, count(*) AS deg FROM edges GROUP BY a),\n"
-    sb ++= "nn AS (SELECT count(*) AS n FROM deg),\n"
-    sb ++= "pr0 AS MATERIALIZED (SELECT a AS node, CAST(1.0 AS DOUBLE)/(SELECT n FROM nn) AS pr FROM deg),\n"
-    for (i <- 1 to iters)
-      sb ++= s"pr$i AS MATERIALIZED (SELECT e.b AS node, CAST(0.15 AS DOUBLE)/(SELECT n FROM nn) + CAST(0.85 AS DOUBLE)*sum(p.pr/d.deg) AS pr " +
-        s"FROM edges e JOIN pr${i - 1} p ON e.a = p.node JOIN deg d ON e.a = d.a GROUP BY e.b),\n"
-    sb ++= s"fin AS (SELECT node, round(pr*(SELECT n FROM nn), 6) AS pr_norm FROM pr$iters)\n"
-    sb ++= "SELECT node, pr_norm FROM fin ORDER BY node"
     sb.toString
   }
 

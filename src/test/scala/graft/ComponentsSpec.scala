@@ -108,6 +108,13 @@ class ComponentsSpec extends AnyFunSuite {
     val iterGrid = forcedIterative(Components.label(mask, width = 64).collect())
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(fastGrid === iterGrid)
+    // a mask whose y column is entirely null has null gate bounds: it
+    // must fall through to the iterative plan, not fail in the gate
+    val nullY = Seq((None: Option[Int], 1), (None, 2), (None, 5)).toDF("y", "x")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val fastNull = rows(Components.label(nullY, width = 64))
+    assert(fastNull.size === 3)
+    assert(fastNull === forcedIterative(rows(Components.label(nullY, width = 64))))
     // long-id edge list with chains, a cycle and duplicate edges
     val edges = Seq((10L, 20L), (20L, 30L), (40L, 50L), (50L, 40L),
         (60L, 61L), (61L, 62L), (62L, 60L), (10L, 20L))

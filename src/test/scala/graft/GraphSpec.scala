@@ -229,11 +229,16 @@ class GraphSpec extends AnyFunSuite {
       .toDF("l_orderkey", "l_partkey", "l_suppkey")
     val tmp = java.nio.file.Files.createTempDirectory("ccspec").toString
     li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val got = Graph.connectedComponents(spark, tmp).collect()
+    def components() = Graph.connectedComponents(spark, tmp).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(got === Set(
+    val want = Set(
       ("p:1", "p:1"), ("p:2", "p:1"), ("s:1", "p:1"),
-      ("p:3", "p:3"), ("s:2", "p:3")))
+      ("p:3", "p:3"), ("s:2", "p:3"))
+    assert(components() === want)
+    // a zero one-task budget forces the iterative labelGraph rounds
+    spark.conf.set("graft.components.localEdgeBudget", "0")
+    try assert(components() === want, "iterative path")
+    finally spark.conf.unset("graft.components.localEdgeBudget")
   }
 
   test("bfsHops walks a path graph to exactly the hop bound") {
