@@ -232,8 +232,10 @@ object Bench {
     // requeried map's size varies run to run. The widest line that
     // fits under the budget ships; degradation order drops the top-N
     // width before the requery map (requeries separate ambient noise
-    // from real regressions — the more valuable signal). Entries are
-    // only ever ADDED vs the r19 top-10 format, never renamed.
+    // from real regressions — the more valuable signal); a cut requery
+    // map says so (requeried_truncated, with the full count in
+    // requeried_n). Entries are only ever ADDED vs the r19 top-10
+    // format, never renamed.
     def consoleLine(topN: Int, rqN: Int): String = {
       val top = medians.filter(_._2 >= 0).toSeq.sortBy(-_._2).take(topN)
         .map { case (k, v) => "\"" + k + "\":" + num2(v) }
@@ -243,7 +245,9 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${num3(total)},"unit":"sec","queries":$top,""" +
         s""""queries_truncated":true,"queries_n":${medians.count(_._2 >= 0)},""" +
-        s""""queries_full":"$outPath","requeried":$rqc,"tags":$tags,""" +
+        s""""queries_full":"$outPath","requeried":$rqc,""" +
+        s""""requeried_truncated":${rqN < requeried.size},"requeried_n":${requeried.size},""" +
+        s""""tags":$tags,""" +
         s""""profile":"$profile","sf":"$sfDir","reps":$reps,"stat":"median","warmup":true}"""
     }
     val budgetChars = 1800 // tail window ~2000 minus sbt's epilogue line

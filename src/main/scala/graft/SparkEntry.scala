@@ -188,11 +188,11 @@ object SparkEntry {
     // recomputed relationally as u4_full_metrics, and MotionSpec
     // proves all three methods' scan semantics on golden videos.
     "u4_method_metrics" -> ((s, _) => BlockMatch.methodMetricsQuery(s)),
-    // the same UDF path, restricted to method='full', which the DuckDB
-    // oracle replays via relational candidate enumeration — the
-    // restriction happens INSIDE the UDF (methods param), not as a
+    // the same kernel path, restricted to method='full', which the
+    // DuckDB oracle replays via relational candidate enumeration — the
+    // restriction happens INSIDE the kernel (methods param), not as a
     // post-filter, so the hill-climb legs never execute here
-    "u4_full_metrics" -> ((s, _) => BlockMatch.methodMetricsQuery(s, Set("full"))),
+    "u4_full_metrics" -> ((s, _) => BlockMatch.methodMetricsQuery(s, Seq("full"))),
     // --- Hough pipeline (§2.4 A9, §2.5 W3, §2.4 A14, §2.2 P5) ---
     "hough_best_circle" -> ((s, _) => Hough.bestCircleQuery(s)),
     // --- HMRF pipeline (§2.2 P6, §2.4 A10, §2.10 U6, §2.5 W5) ---
@@ -1900,7 +1900,7 @@ object SparkEntry {
         |  round(c.p90, 4) AS p90_diff, round(c.ldr, 4) AS low_diff_ratio
         |FROM cls c LEFT JOIN me m USING (frame_idx)
         |ORDER BY frame""".stripMargin,
-    // The UDF full-search leg of U4, replayed relationally: same pixel
+    // The kernel full-search leg of U4, replayed relationally: same pixel
     // Diamond/TSS value pin: the hill climbs are not SQL-expressible,
     // but the clip is synthetic and deterministic (no testdata input),
     // so the 21 output rows are constants. Captured from the verified

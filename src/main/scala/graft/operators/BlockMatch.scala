@@ -1,196 +1,117 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** U4 — block-matching searches that are inherently sequential
-  * (data-dependent hill climbing), plus the patch-gather fast path for
-  * full search (SURVEY §2.10 U4, §4.3; reference
-  * Motion_estimation/motion_codec.py:76-171).
+/** J3/U4 — block matching over dense frame pairs (SURVEY §2.3 J3,
+  * §2.10 U4, §4.3; reference Motion_estimation/motion_codec.py:76-171).
   *
-  * The relational full search (Motion.blockCosts) enumerates all
-  * (2s+1)² candidates through a join — the right *verification* plan.
-  * The *throughput* plan gathers, per block, the current 16×16 pixels
-  * and the (16+2s)² reference patch once, then runs the whole search
-  * in-JVM per row: candidate work becomes register arithmetic instead
-  * of shuffled rows (~289× less shuffle volume for s=8). Diamond and
-  * three-step search only exist here — their iterate-until-no-improve
-  * loops cannot be expressed as a fixed relational plan.
+  * Full, diamond and three-step search run in-JVM per pair row against
+  * the dense reference frame: candidate work is register arithmetic, not
+  * shuffled rows. Diamond and TSS iterate until no improvement, which
+  * no fixed relational plan expresses; MotionSpec keeps the relational
+  * candidate-join plan as the verification plan for full search.
   *
   * All three methods reproduce the reference's scan semantics exactly:
   * strict-improvement updates in the reference's candidate order, and
-  * clip-to-frame window clamping (motion_codec.py:85-86). MotionSpec
-  * asserts the UDF full search is row-identical to the relational plan.
+  * clip-to-frame window clamping (motion_codec.py:85-86).
   */
 object BlockMatch {
 
-  case class MV(method: String, dy: Int, dx: Int, cost: Long, sse: Long)
+  case class BlockMV(frame_idx: Int, method: String, by: Int, bx: Int,
+                     dy: Int, dx: Int, cost: Long, sse: Long)
 
-  /** Run full + diamond + TSS for one block. curBlk is the dense B²
-    * current block (row-major); the ref patch arrives as sparse
-    * (pos, v) pairs covering the in-frame cells of the
-    * (B+2s)²-neighborhood — clipped windows only ever touch in-frame
-    * cells, so absent cells are never read. */
-  def searchAll(curBlk: Seq[Int], patchPos: Seq[Int], patchV: Seq[Int],
-                by: Int, bx: Int, h: Int, w: Int, block: Int, search: Int,
-                methods: Set[String] = Set("full", "diamond", "tss")): Seq[MV] = {
-    val pw = block + 2 * search
-    val patch = Array.fill(pw * pw)(Int.MinValue)
-    var i = 0
-    while (i < patchPos.length) { patch(patchPos(i)) = patchV(i); i += 1 }
-    val (y0, x0) = (by * block, bx * block)
+  private val ldsp = List((0, 0), (0, -2), (0, 2), (-2, 0), (2, 0), (-1, -1), (-1, 1), (1, -1), (1, 1))
+  private val sdsp = List((0, 0), (0, -1), (0, 1), (-1, 0), (1, 0))
 
-    def clip(v: Int, lo: Int, hi: Int) = math.max(lo, math.min(hi, v))
+  /** Every block of `cur` (h×w, row-major) searched in `ref` by each of
+    * `methods` ("full", "diamond", "tss"), within ±search.
+    *
+    * Partial-block rule: only whole blocks are searched. The block grid
+    * is (h / block) × (w / block), the reference's motion-vector grid
+    * (motion_codec.py:76-90, 177-180); a bottom or right strip narrower
+    * than `block` is no block of its own. Its pixels still lie in the
+    * clamped reference windows [0, h-block] × [0, w-block] of the
+    * blocks above and left of it. */
+  def search(frameIdx: Int, cur: Array[Int], ref: Array[Int], h: Int, w: Int,
+             block: Int, search: Int, methods: Seq[String]): Seq[BlockMV] = {
+    require(cur.length == h * w && ref.length == h * w,
+      s"frame $frameIdx: expected $h×$w pixels, got ${cur.length} and ${ref.length}")
+    def clip(v: Int, hi: Int) = math.max(0, math.min(hi, v))
+    for (by <- 0 until h / block; bx <- 0 until w / block; m <- methods) yield {
+      val (y0, x0) = (by * block, bx * block)
+      var (bc, bsse, bdy, bdx) = (Long.MaxValue, 0L, 0, 0)
 
-    def costAt(dy: Int, dx: Int): (Long, Long) = {
-      val yy = clip(y0 + dy, 0, h - block)
-      val xx = clip(x0 + dx, 0, w - block)
-      val (py, px) = (yy - (y0 - search), xx - (x0 - search))
-      var (sad, sse) = (0L, 0L)
-      var r = 0
-      while (r < block) {
-        var c = 0
-        while (c < block) {
-          val d = curBlk(r * block + c) - patch((py + r) * pw + px + c)
-          sad += math.abs(d); sse += d.toLong * d
-          c += 1
-        }
-        r += 1
-      }
-      (sad, sse)
-    }
-
-    def full(): MV = {
-      var (bc, bdy, bdx, bsse) = (Long.MaxValue, 0, 0, 0L)
-      var dy = -search
-      while (dy <= search) {
-        var dx = -search
-        while (dx <= search) {
-          val (c, s) = costAt(dy, dx)
-          if (c < bc) {
-            // best vector reported relative to the clipped window, like
-            // the reference's yy - y0 (motion_codec.py:89)
-            val yy = clip(y0 + dy, 0, h - block); val xx = clip(x0 + dx, 0, w - block)
-            bc = c; bdy = yy - y0; bdx = xx - x0; bsse = s
+      // SAD + squared error of the block against the window at
+      // (y0+dy, x0+dx) clamped to the frame; a strict improvement
+      // becomes the best vector
+      def tryAt(dy: Int, dx: Int): Boolean = {
+        val (yy, xx) = (clip(y0 + dy, h - block), clip(x0 + dx, w - block))
+        var (sad, sse) = (0L, 0L)
+        var r = 0
+        while (r < block) {
+          val co = (y0 + r) * w + x0
+          val ro = (yy + r) * w + xx
+          var c = 0
+          while (c < block) {
+            val d = cur(co + c) - ref(ro + c)
+            sad += math.abs(d); sse += d.toLong * d
+            c += 1
           }
-          dx += 1
+          r += 1
         }
-        dy += 1
+        val better = sad < bc
+        if (better) { bc = sad; bsse = sse; bdy = dy; bdx = dx }
+        better
       }
-      MV("full", bdy, bdx, bc, bsse)
-    }
-
-    def guided(name: String, rounds: List[List[(Int, Int)]]): MV = {
-      var (bdy, bdx) = (0, 0)
-      var (bc, bsse) = costAt(0, 0)
-      def tryAt(cy: Int, cx: Int): Boolean =
-        if (math.max(math.abs(cy), math.abs(cx)) > search) false
-        else {
-          val (c, s) = costAt(cy, cx)
-          if (c < bc) { bc = c; bsse = s; bdy = cy; bdx = cx; true } else false
+      // one pass over a pattern around the best vector, which moves as
+      // soon as a candidate improves on it
+      def probe(pattern: Seq[(Int, Int)]): Boolean =
+        pattern.foldLeft(false) { case (any, (dy, dx)) =>
+          val (cy, cx) = (bdy + dy, bdx + dx)
+          (math.max(math.abs(cy), math.abs(cx)) <= search && tryAt(cy, cx)) || any
         }
-      rounds match {
-        case ldsp :: sdsp :: Nil if name == "diamond" =>
-          val step = 2
+
+      m match {
+        case "full" =>
+          for (dy <- -search to search; dx <- -search to search) tryAt(dy, dx)
+          // reported relative to the clamped window, like the
+          // reference's yy - y0 (motion_codec.py:89)
+          bdy = clip(y0 + bdy, h - block) - y0; bdx = clip(x0 + bdx, w - block) - x0
+        case "diamond" =>
+          tryAt(0, 0)
           var improved = true
-          while (improved && math.max(math.abs(bdy), math.abs(bdx)) + step <= search) {
-            improved = false
-            ldsp.foreach { case (dy, dx) => if (tryAt(bdy + dy, bdx + dx)) improved = true }
-          }
-          improved = true
-          while (improved) {
-            improved = false
-            sdsp.foreach { case (dy, dx) => if (tryAt(bdy + dy, bdx + dx)) improved = true }
-          }
-        case _ => // tss
+          while (improved && math.max(math.abs(bdy), math.abs(bdx)) + 2 <= search) improved = probe(ldsp)
+          while (probe(sdsp)) {}
+        case "tss" =>
+          tryAt(0, 0)
           var s = 1
           while ((s << 1) <= search) s <<= 1
           while (s >= 1) {
-            for (dy <- Seq(-s, 0, s); dx <- Seq(-s, 0, s) if dy != 0 || dx != 0)
-              tryAt(bdy + dy, bdx + dx)
+            probe(for (dy <- Seq(-s, 0, s); dx <- Seq(-s, 0, s) if dy != 0 || dx != 0) yield (dy, dx))
             s /= 2
           }
       }
-      MV(name, bdy, bdx, bc, bsse)
+      BlockMV(frameIdx, m, by, bx, bdy, bdx, bc, bsse)
     }
-
-    val ldsp = List((0, 0), (0, -2), (0, 2), (-2, 0), (2, 0), (-1, -1), (-1, 1), (1, -1), (1, 1))
-    val sdsp = List((0, 0), (0, -1), (0, 1), (-1, 0), (1, 0))
-    Seq.empty[MV] ++
-      (if (methods("full")) Seq(full()) else Nil) ++
-      (if (methods("diamond")) Seq(guided("diamond", List(ldsp, sdsp))) else Nil) ++
-      (if (methods("tss")) Seq(guided("tss", Nil)) else Nil)
   }
 
-  /** Per-(frame, block) search over all three methods: gather current
-    * blocks and sparse ref patches, then one UDF call per block. */
-  def searchMethods(video: DataFrame, frames: DataFrame, h: Int, w: Int,
-                    block: Int = 16, search: Int = 4,
-                    methods: Set[String] = Set("full", "diamond", "tss")): DataFrame = {
-    val (nby, nbx, pw) = (h / block, w / block, block + 2 * search)
-    val cur = video.join(frames.select("frame_idx"), Seq("frame_idx"), "left_semi")
-      .select(col("frame_idx"),
-        expr(s"y div $block").as("by"), expr(s"x div $block").as("bx"),
-        ((col("y") % block) * block + col("x") % block).as("pos"), col("v"))
-      .groupBy("frame_idx", "by", "bx")
-      .agg(sort_array(collect_list(struct(col("pos"), col("v")))).as("blk"))
-      .select(col("frame_idx"), col("by"), col("bx"),
-        expr("transform(blk, s -> s.v)").as("cur_blk"))
-    // each ref pixel feeds at most ceil((B+2s)/B)² patches; enumerate
-    // exactly the covering block range per pixel (bounded explode, not
-    // the full grid). ceil((y-(B-1+s))/B) = (y-(B-1+s)+B-1) div B for
-    // positive numerators; negative numerators truncate toward zero but
-    // the greatest(0, ·) clamp makes that exact too.
-    val patches = video
-      .withColumn("by", explode(sequence(
-        greatest(lit(0), expr(s"(y - ${block - 1 + search} + ${block - 1}) div $block").cast("int")),
-        least(lit(nby - 1), expr(s"(y + $search) div $block").cast("int")))))
-      .withColumn("bx", explode(sequence(
-        greatest(lit(0), expr(s"(x - ${block - 1 + search} + ${block - 1}) div $block").cast("int")),
-        least(lit(nbx - 1), expr(s"(x + $search) div $block").cast("int")))))
-      .select((col("frame_idx") + 1).as("frame_idx"), col("by"), col("bx"),
-        ((col("y") - (col("by") * block - search)) * pw
-          + (col("x") - (col("bx") * block - search))).as("pos"), col("v"))
-      .groupBy("frame_idx", "by", "bx")
-      .agg(sort_array(collect_list(struct(col("pos"), col("v")))).as("patch"))
-      .select(col("frame_idx"), col("by"), col("bx"),
-        expr("transform(patch, s -> s.pos)").as("patch_pos"),
-        expr("transform(patch, s -> s.v)").as("patch_v"))
-    val searchUdf = udf {
-      (curBlk: Seq[Int], patchPos: Seq[Int], patchV: Seq[Int], by: Int, bx: Int) =>
-        searchAll(curBlk, patchPos, patchV, by, bx, h, w, block, search, methods)
-    }
-    cur.join(patches, Seq("frame_idx", "by", "bx"))
-      .withColumn("mv", explode(searchUdf(
-        col("cur_blk"), col("patch_pos"), col("patch_v"), col("by"), col("bx"))))
-      .select(col("frame_idx"), col("by"), col("bx"),
-        col("mv.method").as("method"), col("mv.dy").as("dy"), col("mv.dx").as("dx"),
-        col("mv.cost").as("cost"), col("mv.sse").as("sse"))
-  }
+  /** Per-(frame, block, method) motion vectors over (frame_idx, cur,
+    * prev) pair rows (Motion.framePairs). */
+  def searchPairs(pairs: DataFrame, h: Int, w: Int, block: Int = 16, search: Int = 4,
+                  methods: Seq[String] = Seq("full", "diamond", "tss")): DataFrame =
+    pairs.as(Encoders.product[Motion.FramePair])
+      .flatMap(p => this.search(p.frame_idx, p.cur, p.prev, h, w, block, search, methods))(
+        Encoders.product[BlockMV])
+      .toDF()
 
   /** §2.7 cross-method comparison (demo_synthetic.py:119-129
     * method_metrics.csv): per (method, frame) mean SAD + PSNR on the
     * textured small video, ME gated to MEDIUM frames. */
   def methodMetricsQuery(spark: SparkSession,
-                         methods: Set[String] = Set("full", "diamond", "tss")): DataFrame = {
-    val (h, w, n) = (96, 128, 20)
-    // round-19: an explicit single-partition exchange under the four
-    // consumers (cur blocks, ref patches, stats aggregate + join sides
-    // inside classified). Unlike localCheckpoint (tried: it erases the
-    // plan-visible SinglePartition and every downstream join
-    // re-shuffles — the regression the generator scaladoc warns
-    // about), Exchange(SinglePartition) keeps the shuffle-free join
-    // shape AND lets ReuseExchange serve all consumers from one
-    // generator run.
-    val video = Motion.videoSmall(spark).repartition(1)
-    val medium = Motion.classified(video, nFrames = n).filter(col("class") === "MEDIUM")
-    searchMethods(video, medium, h, w, methods = methods)
-      .groupBy("method", "frame_idx")
-      .agg(round(avg("cost"), 2).as("mean_cost"),
-        (sum("sse") / (h.toDouble * w)).as("mse"))
-      .withColumn("psnr", round(
-        when(col("mse") > 1e-9, lit(10.0) * log10(lit(255.0 * 255.0) / col("mse"))), 4))
-      .select(col("method"), col("frame_idx").as("frame"), col("mean_cost"), col("psnr"))
+                         methods: Seq[String] = Seq("full", "diamond", "tss")): DataFrame =
+    Motion.gatedSearch(spark, methods)._2
+      .select(col("method"), col("frame_idx").as("frame"),
+        round(col("mean_cost"), 2).as("mean_cost"), round(col("psnr"), 4).as("psnr"))
       .orderBy("method", "frame")
-  }
 }

@@ -1,83 +1,75 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Motion-estimation pipeline (reference Motion_estimation/motion_codec.py
-  * + demo_synthetic.py), re-expressed relationally:
+  * + demo_synthetic.py) on dense frames:
   *
-  *  - S12 synthetic video generator (demo_synthetic.py:14-23) → dense
-  *    long-format pixel DataFrame (frame_idx, y, x, v).
-  *  - W1 frame differencing (motion_codec.py:31-35) → self-join on
-  *    frame_idx-1.
-  *  - A7/F6 illumination-invariant MAD (motion_codec.py:40-54) → per-frame
-  *    mean/stddev joined back, normalize, clip.
+  *  - S12 synthetic video generator (demo_synthetic.py:14-23) → one row
+  *    per frame, (frame_idx, pix: array<int>) in row-major order.
+  *  - W1 frame differencing (motion_codec.py:31-35) → one self-join on
+  *    frame_idx-1 gives one (frame_idx, cur, prev) row per frame pair.
+  *  - A6/A7/A8/P7 per-pair stats (motion_codec.py:34-54, 243-251) → the
+  *    plain-Scala pair kernel `pairStats` over that row.
   *  - W2/A8 calibration-prefix percentile thresholds
-  *    (motion_codec.py:57-70) → filter + exact percentile, broadcast as a
-  *    1-row param table (J4).
+  *    (motion_codec.py:57-70) → filter + exact percentile over the
+  *    ≤ 60-row stats table, broadcast as a 1-row param table (J4).
   *  - F2 LOW/MEDIUM/HIGH classification (motion_codec.py:215-221).
-  *  - J3 full-search block matching (motion_codec.py:76-90) → candidate
-  *    displacement explode + equality join on shifted ref positions +
-  *    lexicographic (cost, dy, dx) argmin, which reproduces the
-  *    reference's first-strict-improvement scan order exactly.
+  *  - J3/U4 block matching (motion_codec.py:76-171) → the dense
+  *    BlockMatch kernel over the same pair rows.
   *  - §4.1 gated execution: motion estimation runs only on MEDIUM frames
   *    (motion_codec.py:252-260) via a semi-join on the classified set.
   *  - A6/F4 per-frame mean SAD + PSNR of the compensated frame
-  *    (motion_codec.py:268-270); the per-block squared error of the best
-  *    candidate is carried through the argmin so compensation never
-  *    materializes a second image.
+  *    (motion_codec.py:268-270); each best block carries its own squared
+  *    error, so compensation never materializes a second image.
   *
-  * Scale notes (100 TB intent): pixels are partitioned by frame through
-  * every shuffle (the join keys all lead with frame_idx), so a cluster
-  * run distributes whole frame-pairs; the candidate explode multiplies
-  * rows by (2*search+1)^2 BEFORE the shuffle but aggregates map-side to
-  * one row per (frame, block, candidate). Deviations from the reference,
-  * documented: uint8 truncation of the normalized frame is dropped (we
-  * stay in double — same comparisons, engine-portable), and the
-  * reference's NaN / +inf sentinels become SQL NULLs (PSNR is NULL when
+  * Scale notes (100 TB intent): a pair row holds two frames, so a
+  * cluster run distributes whole frame pairs and every per-pixel loop
+  * stays inside one task. Deviations from the reference, documented:
+  * uint8 truncation of the normalized frame is dropped (we stay in
+  * double — same comparisons, engine-portable), and the reference's
+  * NaN / +inf sentinels become SQL NULLs (PSNR is NULL when
   * mse <= 1e-9, i.e. perfect compensation).
   */
 object Motion {
 
-  /** S12 — synthetic moving-square video as (frame_idx, y, x, v) rows.
+  /** Frame `frame_idx` and its predecessor, both row-major. */
+  case class FramePair(frame_idx: Int, cur: Array[Int], prev: Array[Int])
+
+  /** Pair-kernel output; `norm_mad` is unrounded (see frameStats). */
+  case class PairStats(frame_idx: Int, raw_mad: Double, norm_mad: Double,
+                       p90_diff: Double, low_diff_ratio: Double)
+
+  /** S12 — synthetic moving-square video as (frame_idx, pix) rows.
     * Square bounds are inclusive on both edges (cv2.rectangle thickness
     * -1 semantics, demo_synthetic.py:21). Position integrates a per-frame
-    * velocity expression via a prefix-sum window (position before this
-    * frame's step, matching the generator loop order). `textured` adds a
-    * deterministic (x*7 + y*13 + frame*31) % 17 pattern so block SADs
-    * have unique minima and compensation error is nonzero. */
+    * velocity expression (position before this frame's step, matching
+    * the generator loop order). `textured` adds a deterministic
+    * (x*7 + y*13 + frame*31) % 17 pattern so block SADs have unique
+    * minima and compensation error is nonzero. The clip is a few dozen
+    * frames, so it is rendered once, in the calling JVM, into a local
+    * relation; building the DataFrame runs no job. */
   def syntheticVideo(spark: SparkSession, nFrames: Int, h: Int, w: Int,
                      square: Int, vx: Column, vy: Column, textured: Boolean,
-                     startX: Int = 30, startY: Int = 40, videoId: Int = 0): DataFrame = {
-    // The prefix-sum window runs over nFrames rows (pre-explode), keyed
-    // by video_id so the code keeps the partition-per-video shape a
-    // multi-video corpus needs. In THIS single-video generator the key
-    // is a constant: Catalyst folds it, the window plans as
-    // SinglePartition (the benign "No Partition Defined" WARN over
-    // <=60 rows), and — measured, not guessed — that is the FAST plan:
-    // SinglePartition satisfies every downstream join's distribution
-    // requirement, so the whole frameStats/blockMatch pipeline of one
-    // clip runs shuffle-free. Forcing the key to survive (pmod tricks,
-    // scatter-join prefix sums, frame-table checkpoints all tried)
-    // makes every self-join re-shuffle the 245k-row pixel relation and
-    // doubles the u4 bench queries. Multi-video corpora come from the
-    // Avi/VideoFrames sources, whose ordering keys are real columns.
-    val wPrev = Window.partitionBy("video_id").orderBy("frame_idx")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val base = spark.range(nFrames).select(col("id").cast("int").as("frame_idx"))
-      .withColumn("video_id", lit(videoId))
-      .withColumn("vx", vx)
-      .withColumn("vy", vy)
-      .withColumn("x0", (lit(startX) + coalesce(sum("vx").over(wPrev), lit(0))).cast("int"))
-      .withColumn("y0", (lit(startY) + coalesce(sum("vy").over(wPrev), lit(0))).cast("int"))
-      .withColumn("y", explode(sequence(lit(0), lit(h - 1))))
-      .withColumn("x", explode(sequence(lit(0), lit(w - 1))))
-    val squareV = when(
-      col("x").between(col("x0"), col("x0") + square) &&
-      col("y").between(col("y0"), col("y0") + square), 200).otherwise(0)
-    val texV = if (textured) (col("x") * 7 + col("y") * 13 + col("frame_idx") * 31) % 17 else lit(0)
-    base.withColumn("v", squareV + texV).select("frame_idx", "y", "x", "v")
+                     startX: Int = 30, startY: Int = 40): DataFrame = {
+    import spark.implicits._
+    // a projection of a local relation folds at optimization time, so
+    // evaluating the velocity expressions runs no job
+    val vel = (0 until nFrames).toDF("frame_idx")
+      .select(col("frame_idx"), vx.cast("long"), vy.cast("long"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val x0s = vel.scanLeft(startX.toLong)(_ + _._2)
+    val y0s = vel.scanLeft(startY.toLong)(_ + _._3)
+    vel.indices.map { i =>
+      val (f, x0, y0) = (vel(i)._1, x0s(i).toInt, y0s(i).toInt)
+      f -> Array.tabulate(h * w) { pos =>
+        val y = pos / w
+        val x = pos % w
+        val sq = if (x >= x0 && x <= x0 + square && y >= y0 && y <= y0 + square) 200 else 0
+        sq + (if (textured) (x * 7 + y * 13 + f * 31) % 17 else 0)
+      }
+    }.toDF("frame_idx", "pix")
   }
 
   /** 20-frame 128×96 textured video, velocity (2,1) — small enough that
@@ -100,34 +92,83 @@ object Motion {
       when(col("frame_idx") % 11 === 0, 6).when(col("frame_idx") % 4 === 0, 0).otherwise(1),
       textured = false)
 
-  /** W1/A6/A7/A8/P7 — per-frame-pair stats: raw MAD, illumination-
-    * invariant MAD (normalize curr to prev's mean/std, clip to [0,255]),
-    * exact p90 of the raw diff, low-diff pixel ratio. One row per frame
-    * i >= 1 (diff vs frame i-1), exactly motion_codec.py:243-251. */
-  def frameStats(video: DataFrame, lowDiffThreshold: Int = 10): DataFrame = {
-    val stats = video.groupBy("frame_idx")
-      .agg(avg("v").as("m"), stddev_pop(col("v")).as("s"))
-    val prev = video.select(
-      (col("frame_idx") + 1).as("frame_idx"), col("y"), col("x"), col("v").as("pv"))
-    video.join(prev, Seq("frame_idx", "y", "x"))
-      .join(stats.select(col("frame_idx"), col("m").as("m1"), col("s").as("s1")), Seq("frame_idx"))
-      .join(stats.select((col("frame_idx") + 1).as("frame_idx"),
-        col("m").as("m0"), col("s").as("s0")), Seq("frame_idx"))
-      .withColumn("d", abs(col("v") - col("pv")))
-      .withColumn("vn", greatest(lit(0.0), least(lit(255.0),
-        (col("v") - col("m1")) * ((col("s0") + 1e-6) / (col("s1") + 1e-6)) + col("m0"))))
-      .withColumn("dn", abs(col("pv") - col("vn")))
-      .groupBy("frame_idx")
-      .agg(
-        avg("d").as("raw_mad"),
+  /** Dense (frame_idx, pix) frames pass through; the pixel relation
+    * (frame_idx, y, x, v) of the decoded sources (Avi.readPixels,
+    * VideoFrames.framePixels) is packed into row-major frames. */
+  def denseFrames(video: DataFrame): DataFrame =
+    if (video.columns.contains("pix")) video.select("frame_idx", "pix")
+    else video.groupBy("frame_idx")
+      .agg(sort_array(collect_list(struct(col("y"), col("x"), col("v")))).as("px"))
+      .select(col("frame_idx"), expr("transform(px, p -> p.v)").as("pix"))
+
+  /** W1 — one (frame_idx, cur, prev) row per frame i whose frame i-1
+    * exists. */
+  def framePairs(video: DataFrame): DataFrame = {
+    val frames = denseFrames(video)
+    frames.join(frames.select((col("frame_idx") + 1).as("frame_idx"), col("pix").as("prev")),
+        "frame_idx")
+      .select(col("frame_idx"), col("pix").as("cur"), col("prev"))
+  }
+
+  /** The pair kernel (motion_codec.py:34-54, 243-251): raw MAD, the
+    * illumination-invariant MAD (normalize cur to prev's mean and
+    * population std, clip to [0, 255]), the exact p90 of the raw diff
+    * with Spark `percentile`'s linear interpolation between the order
+    * statistics at floor/ceil of (n-1)·0.9, and the ratio of diffs
+    * below `lowDiffThreshold`. Means and stds come from exact integer
+    * sums and a second pass over the deviations. */
+  def pairStats(frameIdx: Int, cur: Array[Int], prev: Array[Int],
+                lowDiffThreshold: Int = 10): PairStats = {
+    require(cur.length == prev.length && cur.length > 0,
+      s"frame $frameIdx: pair sizes ${cur.length} and ${prev.length}")
+    val n = cur.length
+    val d = new Array[Int](n)
+    var (sumD, low, sum1, sum0) = (0L, 0L, 0L, 0L)
+    var i = 0
+    while (i < n) {
+      val di = math.abs(cur(i) - prev(i))
+      d(i) = di; sumD += di
+      if (di < lowDiffThreshold) low += 1
+      sum1 += cur(i); sum0 += prev(i)
+      i += 1
+    }
+    val (m1, m0) = (sum1.toDouble / n, sum0.toDouble / n)
+    var (ss1, ss0) = (0.0, 0.0)
+    i = 0
+    while (i < n) {
+      val e1 = cur(i) - m1
+      val e0 = prev(i) - m0
+      ss1 += e1 * e1; ss0 += e0 * e0
+      i += 1
+    }
+    val scale = (math.sqrt(ss0 / n) + 1e-6) / (math.sqrt(ss1 / n) + 1e-6)
+    var dn = 0.0
+    i = 0
+    while (i < n) {
+      dn += math.abs(prev(i) - math.max(0.0, math.min(255.0, (cur(i) - m1) * scale + m0)))
+      i += 1
+    }
+    java.util.Arrays.sort(d)
+    val pos = (n - 1) * 0.9
+    val (lo, hi) = (pos.floor.toLong, pos.ceil.toLong)
+    val p90 =
+      if (lo == hi || d(lo.toInt) == d(hi.toInt)) d(lo.toInt).toDouble
+      else (hi - pos) * d(lo.toInt) + (pos - lo) * d(hi.toInt)
+    PairStats(frameIdx, sumD.toDouble / n, dn / n, p90, low.toDouble / n)
+  }
+
+  /** W1/A6/A7/A8/P7 — per-frame-pair stats, one row per frame i >= 1
+    * (diff vs frame i-1), exactly motion_codec.py:243-251. */
+  def frameStats(video: DataFrame, lowDiffThreshold: Int = 10): DataFrame =
+    framePairs(video).as(Encoders.product[FramePair])
+      .map(p => pairStats(p.frame_idx, p.cur, p.prev, lowDiffThreshold))(Encoders.product[PairStats])
+      .select(col("frame_idx"), col("raw_mad"),
         // mad feeds strict-inequality classification against percentiles
         // of itself; rounding to 6 decimals removes last-ulp
-        // summation-order nondeterminism at the threshold knife edge
-        // (frames with nominally equal MADs must classify identically).
-        round(avg("dn"), 6).as("mad"),
-        expr("percentile(d, 0.9)").as("p90_diff"),
-        avg(when(col("d") < lowDiffThreshold, 1.0).otherwise(0.0)).as("low_diff_ratio"))
-  }
+        // summation-order noise at the threshold knife edge (frames with
+        // nominally equal MADs must classify identically)
+        round(col("norm_mad"), 6).as("mad"),
+        col("p90_diff"), col("low_diff_ratio"))
 
   /** W2/A8/F2 — calibrate T_low/T_high from the first
     * min(calibrationFrames, nFrames-1) MADs (motion_codec.py:57-70,
@@ -149,66 +190,34 @@ object Motion {
           .otherwise("MEDIUM"))
   }
 
-  /** J3 — SAD cost surface for full-search block matching: every block ×
-    * every displacement in [-search, search]². The ref position clips to
-    * the frame like motion_codec.py:85-86 (clip_range), so border blocks
-    * probe clamped windows. Returns one row per
-    * (frame, by, bx, dy, dx) with the SAD and squared error. */
-  def blockCosts(video: DataFrame, frames: DataFrame, h: Int, w: Int,
-                 block: Int = 16, search: Int = 4): DataFrame = {
-    val cur = video.join(frames.select("frame_idx"), Seq("frame_idx"), "left_semi")
-      .select(col("frame_idx"),
-        expr(s"y div $block").as("by"), expr(s"x div $block").as("bx"),
-        (col("y") % block).as("py"), (col("x") % block).as("px"), col("v"))
-    val ref = video.select((col("frame_idx") + 1).as("frame_idx"),
-      col("y").as("ry"), col("x").as("rx"), col("v").as("rv"))
-    cur
-      .withColumn("dy", explode(sequence(lit(-search), lit(search))))
-      .withColumn("dx", explode(sequence(lit(-search), lit(search))))
-      .withColumn("ry", greatest(lit(0), least(lit(h - block), col("by") * block + col("dy"))) + col("py"))
-      .withColumn("rx", greatest(lit(0), least(lit(w - block), col("bx") * block + col("dx"))) + col("px"))
-      .join(ref, Seq("frame_idx", "ry", "rx"))
-      .groupBy("frame_idx", "by", "bx", "dy", "dx")
-      .agg(
-        sum(abs(col("v") - col("rv"))).as("cost"),
-        sum((col("v") - col("rv")) * (col("v") - col("rv"))).as("sse"))
-  }
-
-  /** A14 — per-block motion vector: lexicographic (cost, dy, dx) argmin
-    * over the cost surface = the reference's first-strict-improvement
-    * scan (motion_codec.py:83-90 iterates dy, dx ascending and keeps the
-    * first strictly better candidate). */
-  def bestVectors(costs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("frame_idx", "by", "bx")
-      .orderBy(col("cost"), col("dy"), col("dx"))
-    costs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("frame_idx", "by", "bx", "dy", "dx", "cost", "sse")
-  }
-
-  /** A6/F4 — per-frame ME summary: mean SAD over blocks and PSNR of the
-    * block-compensated frame (motion_codec.py:268-270). The compensated
-    * image is never materialized: each best block carries its own squared
-    * error, so mse = sum(sse) / (h*w). PSNR is NULL when compensation is
+  /** A6/F4 — per-(method, frame) ME summary: mean SAD over blocks and
+    * PSNR of the block-compensated frame (motion_codec.py:268-270),
+    * mse = sum(sse) / (h*w). PSNR is NULL when compensation is
     * (near-)exact, where the reference emits +inf. */
   def meSummary(best: DataFrame, h: Int, w: Int): DataFrame =
-    best.groupBy("frame_idx")
+    best.groupBy("method", "frame_idx")
       .agg(avg("cost").as("mean_cost"), (sum("sse") / (h.toDouble * w)).as("mse"))
       .withColumn("psnr",
         when(col("mse") > 1e-9, lit(10.0) * log10(lit(255.0 * 255.0) / col("mse"))))
 
+  /** The small clip classified, plus the ME summary of `methods` gated
+    * to its MEDIUM frames — the path motion_decisions and the u4
+    * metrics share. */
+  def gatedSearch(spark: SparkSession, methods: Seq[String]): (DataFrame, DataFrame) = {
+    val (h, w, n) = (96, 128, 20)
+    val video = videoSmall(spark)
+    val cls = classified(video, nFrames = n)
+    val medium = cls.filter(col("class") === "MEDIUM").select("frame_idx")
+    val pairs = framePairs(video).join(medium, Seq("frame_idx"), "left_semi")
+    (cls, meSummary(BlockMatch.searchPairs(pairs, h, w, methods = methods), h, w))
+  }
+
   /** ST3/F2 — the full decisions table (motion_codec.py:241-288,
-    * demo_synthetic.py:101-108): per-frame stats + class, with motion
-    * estimation gated to MEDIUM frames only (§4.1 cheap-test-then-
+    * demo_synthetic.py:101-108): per-frame stats + class, with full
+    * search gated to MEDIUM frames only (§4.1 cheap-test-then-
     * expensive-compute). LOW/HIGH frames carry NULL cost/psnr. */
   def decisions(spark: SparkSession): DataFrame = {
-    val (h, w, n, block, search) = (96, 128, 20, 16, 4)
-    // The generated pixel relation is consumed four times (stats join,
-    // per-frame stats, cur blocks, ref side); materialize it once so the
-    // window-cumsum generator doesn't re-run per consumer.
-    val video = videoSmall(spark).localCheckpoint()
-    val cls = classified(video, nFrames = n).localCheckpoint()
-    val medium = cls.filter(col("class") === "MEDIUM")
-    val me = meSummary(bestVectors(blockCosts(video, medium, h, w, block, search)), h, w)
+    val (cls, me) = gatedSearch(spark, Seq("full"))
     cls.join(me, Seq("frame_idx"), "left")
       .select(
         col("frame_idx").as("frame"),
@@ -224,22 +233,9 @@ object Motion {
 
   /** Per-frame stats + class on the reference-sized variable-velocity
     * video — the no-ME half of the pipeline at full frame size, with all
-    * three classes present. NOTE (ADVICE r19): the generator is eagerly
-    * localCheckpoint'ed at construction time — building or explaining
-    * this query runs that materialization job. */
+    * three classes present. */
   def frameStatsQuery(spark: SparkSession): DataFrame =
-    // round-19: materialize the generated pixel relation once — the
-    // three consumers inside frameStats (stats aggregate, current
-    // side, prev side) otherwise re-run the window-cumsum generator
-    // per subtree (2.95M rows x3 at this frame size). Both
-    // single-materialization forms were measured: localCheckpoint
-    // 4.61 s vs repartition(1)+ReuseExchange 6.15 s vs 5.58 s
-    // unmaterialized — at this row count losing the plan-visible
-    // SinglePartition is a WIN, because the downstream self-joins
-    // re-shuffle to 32 partitions and parallelize what was a
-    // one-core pipeline (the u4 twins at 245k rows measure the
-    // opposite; see BlockMatch.methodMetricsQuery).
-    classified(videoVariable(spark).localCheckpoint(), nFrames = 60)
+    classified(videoVariable(spark), nFrames = 60)
       .select(
         col("frame_idx").as("frame"),
         round(col("raw_mad"), 4).as("mad_raw"),

@@ -146,7 +146,8 @@ object Avi {
   val parseUdf = udf { bytes: Array[Byte] => parse(bytes) }
 
   /** Read a directory/glob of AVI clips into the long pixel relation
-    * (video_id, frame_idx, y, x, v) the motion operators consume.
+    * (video_id, frame_idx, y, x, v); Motion.frameStats packs it back
+    * into dense frames (Motion.denseFrames).
     * video_id is the file path — a stable, shuffle-free key (a dense
     * int would need a global rank, the single-partition window this
     * repo bans); downstream operators only group/partition by it. */

@@ -27,8 +27,9 @@ object VideoFrames {
       .withColumn("video_id", lit(videoId))
       .select("video_id", "frame_idx", "content")
 
-  /** Decode frames to the (frame_idx, y, x, v) pixel relation the
-    * motion operators consume (Motion.frameStats, BlockMatch). */
+  /** Decode frames to the (video_id, frame_idx, y, x, v) pixel
+    * relation; Motion.frameStats packs it back into dense frames
+    * (Motion.denseFrames). */
   def framePixels(frames: DataFrame): DataFrame =
     ImageSource.decode(frames)
       .select(col("video_id"), col("frame_idx"), col("width"),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Motion
 
 /** ST3 — the ordered frame pipeline as a true stream (SURVEY §2.9: "a
   * streaming variant would be flatMapGroupsWithState keyed by video id
@@ -9,12 +10,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * iterates frames with state = previous frame).
   *
   * State per video = the last seen (frame_idx, pixels); each arriving
-  * frame emits its raw MAD against the carried predecessor and replaces
-  * the state — so differencing works across micro-batch boundaries.
+  * frame emits its raw MAD against the carried predecessor (the batch
+  * pipeline's pair kernel, Motion.pairStats) and replaces the state —
+  * so differencing works across micro-batch boundaries.
   * Within a batch frames are sorted by index (file/memory sources can
   * deliver a batch out of order); across batches arrival order must be
   * monotone per video, which matches the reference's sequential read.
-  * StreamingSpec asserts parity with the batch lag-join
+  * StreamingSpec asserts parity with the batch pipeline
   * (Motion.frameStats raw_mad) including a mid-video batch split. */
 object FrameStream {
 
@@ -33,9 +35,7 @@ object FrameStream {
           val out = sorted.flatMap { f =>
             val diff = prev.collect {
               case (prevIdx, prevPx) if prevIdx == f.frameIdx - 1 =>
-                val mad = prevPx.zip(f.pixels)
-                  .map { case (a, b) => math.abs(a - b).toLong }.sum.toDouble / prevPx.length
-                FrameDiff(key, f.frameIdx, mad)
+                FrameDiff(key, f.frameIdx, Motion.pairStats(f.frameIdx, f.pixels, prevPx).raw_mad)
             }
             prev = Some((f.frameIdx, f.pixels))
             diff

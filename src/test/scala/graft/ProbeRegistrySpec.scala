@@ -143,7 +143,8 @@ class ProbeRegistrySpec extends AnyFunSuite {
     // round-20 additions: the decontamination family (reshaped twice —
     // r19 single-pass, r20 de-skew pre-aggregate) and the rec/logreg
     // rows whose r19 materialization change deferred its 100x
-    // re-measure; all five now have recorded triples and stay pinned
+    // re-measure; these four now have recorded triples and stay pinned
+    // (rec_item_neighbors, listed above, was already pinned)
     "txt_decontaminate", "txt_mask_spans", "txt_pipeline_manifest",
     "txt_logreg_scores")
 

@@ -68,12 +68,10 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Motion
     import graft.streaming.FrameStream
     import graft.streaming.FrameStream.Frame
-    // collect the constant video into dense frames
-    val frames = Motion.videoConstant(spark)
-      .orderBy("frame_idx", "y", "x")
-      .collect().groupBy(_.getAs[Int]("frame_idx"))
-      .toSeq.sortBy(_._1)
-      .map { case (idx, rows) => Frame(0, idx, rows.map(_.getAs[Int]("v"))) }
+    // the constant video's dense frames, in order
+    val frames = Motion.videoConstant(spark).collect()
+      .map(r => Frame(0, r.getAs[Int]("frame_idx"), r.getAs[Seq[Int]]("pix").toArray))
+      .sortBy(_.frameIdx).toSeq
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Frame]
     val query = FrameStream.frameDiffs(stream.toDS()).writeStream
