@@ -89,7 +89,7 @@ case class DotProduct(left: Expression, right: Expression)
   * production plane counts, far past the whole-stage-codegen budget,
   * so the projection fell back to interpreted eval and the bucket
   * explode alone measured 52.9 s of cosineNearDupPairsOn's 57.6 s at
-  * 100× (EmbProfileProbe). Here the coefficients are ONE flat
+  * 100× (BASELINE.md round 16). Here the coefficients are ONE flat
   * Array[Double] reference ([[VectorExpressions.planeComponent]], the
   * same splitmix64 construction the det-rung oracle interpolates as
   * SQL literals) and the whole key derivation is three nested loops

@@ -184,8 +184,8 @@ object Similarity {
     * dedup candidate id pairs; exact cosine re-rank on the deduped set.
     * Recall < 1 by construction; SimilaritySpec bounds recall against
     * bruteForceTopKOn (0.60 measured at the 4-plane/8-table default on
-    * the sf0.001 corpus — see LshProbe for the sweep; denser/larger
-    * corpora warrant more planes per table to keep buckets selective). */
+    * the sf0.001 corpus; denser/larger corpora warrant more planes per
+    * table to keep buckets selective). */
   def lshTopKOn(all: DataFrame, nQueries: Int = 5, k: Int = 3,
                 nPlanes: Int = 4, nTables: Int = 8, dims: Int = 64): DataFrame = {
     val qb = bucketIds(all.filter(col("vec_id") < nQueries), "query_id", nPlanes, nTables, dims)

@@ -7,11 +7,12 @@ import graft.metrics.Prometheus
 
 /** Dup-heavy STREAMING soak (round-16, VERDICT item 4): the batch
   * signature collapse's payoff regime — a few templates duplicated
-  * thousands of times (DupProbe: 10 × 2,000) — hammered through
+  * thousands of times (BASELINE.md round 14's dup-heavy corpus:
+  * 10 templates × 2,000 copies) — hammered through
   * `StreamNearDup.minhashPairsStream`, which CANNOT collapse (members
   * arrive over time) and instead bounds work by the event-time
   * horizon. The round-12 churn soak predates the collapse and drove
-  * one template at 2 docs/hour; this one drives the full DupProbe
+  * one template at 2 docs/hour; this one drives that full
   * multiplicity and asserts the two properties that make the
   * streaming twin safe under real duplicate churn:
   *   - state stays at templates × bands buckets with members pruned
@@ -51,7 +52,7 @@ class DupStreamSoakSpec extends AnyFunSuite {
       val emitted = scala.collection.mutable.Map.empty[Long, Long]
       for (h <- 0 until 200) {
         // 10 fresh copies of each of the 10 templates per hour-batch:
-        // 200 batches x 10 = the DupProbe multiplicity (2,000/template)
+        // 200 batches x 10 = the dup-heavy corpus's 2,000 copies/template
         stream.addData((0 until 10).flatMap(t => (0 until 10).map(c =>
           ((h * 100 + t * 10 + c).toLong,
             new java.sql.Timestamp(h * 3600000L + c * 1000L),

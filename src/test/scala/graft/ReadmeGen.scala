@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** README query-map generator (round-10, VERDICT item 8): the registry
   * is 200+ queries across 25+ modules with no single entry-point map.
-  * `section()` renders the full `SparkEntry.queries` surface grouped by
-  * family with the implementing module linked; `main` splices it into
+  * `section()` renders `SparkEntry.registry` grouped by each entry's
+  * `family`, with the family's module linked; `main` splices it into
   * README.md between the markers. ReadmeSyncSpec asserts the README
   * carries EXACTLY the current render — add a query, rerun
   * `sbt "Test/runMain graft.ReadmeGen"`, or the suite goes red. */
@@ -14,86 +14,24 @@ object ReadmeGen {
   val begin = "<!-- BEGIN GENERATED QUERY MAP (Test/runMain graft.ReadmeGen) -->"
   val end = "<!-- END GENERATED QUERY MAP -->"
 
-  /** Ordered prefix → (family, implementing module). First match wins;
-    * names that match nothing land in "Composition & audit". */
-  private val families: Seq[(String => Boolean, String, String)] = Seq(
-    ((n: String) => n.startsWith("q") && n.drop(1).headOption.exists(_.isDigit),
-      "TPC-H-style relational", "src/main/scala/graft/operators/Relational.scala"),
-    ((n: String) => Set("s2_point_lookup", "s3_filtered_scan", "s5_update_rewrite",
-      "s6_anti_join", "set_ops", "profile_orders", "skyline_parts").exists(n.startsWith)
-      || n.startsWith("sample_") || n.startsWith("skew_")
-      || n.startsWith("rollup_") || n.startsWith("cube_") || n.startsWith("gsets_")
-      || n.startsWith("f1_") || n.startsWith("f2_") || n.startsWith("f6_")
-      || n.startsWith("f7_") || n.startsWith("a8_") || n.startsWith("robust_"),
-      "Scans, DML shapes, scalar functions & grouping sets",
-      "src/main/scala/graft/operators/Relational.scala"),
-    ((n: String) => n.startsWith("w_") || n.startsWith("w4_"),
-      "Window & sessionization", "src/main/scala/graft/operators/Relational.scala"),
-    ((n: String) => n.startsWith("j_") || n.startsWith("j1_"),
-      "Joins: as-of, interval, attribution", "src/main/scala/graft/operators/Temporal.scala"),
-    ((n: String) => n.startsWith("cdc_") || n.startsWith("mv_"),
-      "CDC, SCD2, point-in-time & incremental MV", "src/main/scala/graft/operators/Temporal.scala"),
-    ((n: String) => n.startsWith("graph_"),
-      "Graph analytics (bucketed edge layout)", "src/main/scala/graft/operators/Graph.scala"),
-    ((n: String) => n.startsWith("dedup_"),
-      "Deduplication & entity resolution", "src/main/scala/graft/dedup/Dedup.scala"),
-    ((n: String) => n.startsWith("emb_"),
-      "Embeddings: ANN ladder, semantic dedup, retrieval ops",
-      "src/main/scala/graft/similarity/Similarity.scala"),
-    ((n: String) => n.startsWith("search_"),
-      "Lexical & hybrid retrieval (BM25, RRF)", "src/main/scala/graft/text/TextAnalysis.scala"),
-    ((n: String) => n.startsWith("txt_"),
-      "Text analysis & curation", "src/main/scala/graft/text/TextAnalysis.scala"),
-    ((n: String) => n.startsWith("mix_"),
-      "Data mixture: DSIR, temperature, budgets", "src/main/scala/graft/text/TextAnalysis.scala"),
-    ((n: String) => n.startsWith("sketch_"),
-      "Sketches: CMS, KMV, MG, histogram quantiles", "src/main/scala/graft/operators/Events.scala"),
-    ((n: String) => n.startsWith("ts_") || n.startsWith("stat_") || n.startsWith("chi2_")
-      || n.startsWith("markov_") || n.startsWith("anomaly"),
-      "Drift, changepoints & statistics", "src/main/scala/graft/operators/Events.scala"),
-    ((n: String) => n.startsWith("a") && n.drop(1).headOption.exists(_.isDigit)
-      || n.startsWith("a_") || n.startsWith("cep_") || n.startsWith("funnel_")
-      || n.startsWith("retention_") || n.startsWith("rfm_") || n.startsWith("s16_")
-      || n.startsWith("f9_") || n.startsWith("session_") || n.startsWith("st2_"),
-      "Event analytics (REST-reference surface + streaming twins)",
-      "src/main/scala/graft/operators/Events.scala"),
-    ((n: String) => n.startsWith("assoc_") || n.startsWith("fp_") || n.startsWith("rec_"),
-      "Association rules & recommenders", "src/main/scala/graft/operators/Recommend.scala"),
-    ((n: String) => n.startsWith("hough_") || n.startsWith("ellipse_") || n.startsWith("u2_")
-      || n.startsWith("img_"),
-      "Vision: Hough, ellipse, kernels, image decode", "src/main/scala/graft/operators/Vision.scala"),
-    ((n: String) => n.startsWith("hmrf_") || n.startsWith("s8_"),
-      "HMRF-EM volume segmentation & DICOM", "src/main/scala/graft/operators/HMRF.scala"),
-    ((n: String) => n.startsWith("motion_") || n.startsWith("u4_"),
-      "Motion estimation & block matching", "src/main/scala/graft/operators/Motion.scala"),
-    ((n: String) => n.startsWith("avi_") || n.startsWith("audio_") || n.startsWith("warc_"),
-      "Containers: AVI/MJPEG, audio, WARC", "src/main/scala/graft/sources/Avi.scala"))
-
-  def familyOf(name: String): (String, String) =
-    families.collectFirst { case (p, fam, file) if p(name) => (fam, file) }
-      .getOrElse(("Composition & audit",
-        "src/main/scala/graft/SparkEntry.scala"))
-
   def section(): String = {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val oracled = SparkEntry.oracleSql.keySet
-    val grouped = names.groupBy(familyOf).toSeq
-      .sortBy { case ((fam, _), _) => fam }
+    val all = SparkEntry.registry
+    val grouped = all.groupBy(_.family).toSeq.sortBy(_._1.title)
     val sb = new StringBuilder
     sb ++= begin + "\n\n"
-    sb ++= s"${names.size} registry queries (${names.count(oracled)} DuckDB-oracled, " +
+    sb ++= s"${all.size} registry queries (${all.count(_.oracle.isDefined)} DuckDB-oracled, " +
       "the rest rows-only by nature with spec siblings), grouped by family.\n\n"
     sb ++= "| Family | Queries | Module |\n| --- | --- | --- |\n"
-    for (((fam, file), qs) <- grouped) {
-      val marked = qs.map { q =>
-        val base = if (oracled(q)) q else s"$q*"
-        SparkEntry.queryTag(q) match {
-          case "audit" => s"$base†"
-          case "build" => s"$base‡"
-          case _ => base
+    for ((fam, qs) <- grouped) {
+      val marked = qs.sortBy(_.name).map { q =>
+        val base = if (q.oracle.isDefined) q.name else s"${q.name}*"
+        q.tag match {
+          case SparkEntry.Tag.Audit => s"$base†"
+          case SparkEntry.Tag.Build => s"$base‡"
+          case SparkEntry.Tag.Production => base
         }
       }.mkString(", ")
-      sb ++= s"| $fam (${qs.size}) | $marked | [`${file.split('/').last}`]($file) |\n"
+      sb ++= s"| ${fam.title} (${qs.size}) | $marked | [`${fam.module.split('/').last}`](${fam.module}) |\n"
     }
     sb ++= "\n`*` = no SQL-expressible oracle (approx/LSH/ML-trained); carries a spec.\n"
     sb ++= "`†` = audit rung: exact verification, superlinear at scale by contract; " +
@@ -111,6 +49,6 @@ object ReadmeGen {
       if (b >= 0 && e >= 0) cur.substring(0, b) + section() + cur.substring(e + end.length)
       else cur + "\n## Query surface\n\n" + section() + "\n"
     Files.writeString(path, next)
-    println(s"[readme] wrote query map: ${SparkEntry.queries.size} queries")
+    println(s"[readme] wrote query map: ${SparkEntry.registry.size} queries")
   }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** README↔registry sync gate (round-10, VERDICT item 8): the README's
   * generated query map must be EXACTLY the current render of
-  * `SparkEntry.queries` — registering a query without rerunning
+  * `SparkEntry.registry` — registering a query without rerunning
   * `sbt "Test/runMain graft.ReadmeGen"` goes red here, so the API map
   * can never silently rot. */
 class ReadmeSyncSpec extends AnyFunSuite {
@@ -18,22 +18,23 @@ class ReadmeSyncSpec extends AnyFunSuite {
       "README query map is stale — run: sbt \"Test/runMain graft.ReadmeGen\"")
   }
 
-  test("registry tags name only registered queries and keep their contracts") {
-    val names = SparkEntry.queries.keySet
-    (SparkEntry.auditQueries ++ SparkEntry.buildQueries).foreach { q =>
-      assert(names.contains(q), s"tagged query $q is not in the registry")
+  test("registry names are unique, families link modules, tags keep contracts") {
+    val all = SparkEntry.registry
+    val names = all.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate registry names: ${names.diff(names.distinct).mkString(", ")}")
+    all.map(_.family).distinct.foreach { f =>
+      assert(new java.io.File(f.module).exists(), s"${f.title} -> ${f.module} does not exist")
     }
-    assert((SparkEntry.auditQueries & SparkEntry.buildQueries).isEmpty,
-      "a query cannot be both audit and build")
     // every audit rung keeps its oracle (that's what it is FOR): the
     // exact rung exists to make approximate siblings' recall a
     // measurable quantity, so it must itself sit on the hash gate
-    SparkEntry.auditQueries.foreach { q =>
-      assert(SparkEntry.oracleSql.contains(q), s"audit rung $q lost its oracle")
+    all.filter(_.tag == SparkEntry.Tag.Audit).foreach { q =>
+      assert(q.oracle.isDefined, s"audit rung ${q.name} lost its oracle")
     }
     // the production profile is the overwhelming majority of the surface
-    val prod = names.count(SparkEntry.queryTag(_) == "production")
-    assert(prod >= names.size - 10, s"only $prod/${names.size} production-tagged")
+    val prod = all.count(_.tag == SparkEntry.Tag.Production)
+    assert(prod >= all.size - 10, s"only $prod/${all.size} production-tagged")
   }
 
   test("BASELINE.md registry reconciliation matches the live registry") {
@@ -54,12 +55,5 @@ class ReadmeSyncSpec extends AnyFunSuite {
     assert((m.group(1).toInt, m.group(2).toInt, m.group(3).toInt) == ((live, timed, build)),
       s"BASELINE.md reconciliation '${m.matched}' is stale — registry is " +
         s"$live = $timed timed + $build build; append the updated line")
-  }
-
-  test("every query family links an existing module file") {
-    SparkEntry.queries.keys.foreach { q =>
-      val (_, file) = ReadmeGen.familyOf(q)
-      assert(new java.io.File(file).exists(), s"$q -> $file does not exist")
-    }
   }
 }

@@ -41,8 +41,8 @@ class SimilaritySpec extends AnyFunSuite {
     val approx = pairs(Similarity.lshTopKOn(all, nQueries = 5, k = 3))
     val recall = (exact intersect approx).size.toDouble / exact.size
     // Deterministic hyperplanes -> this is a fixed number for this
-    // corpus (0.60 at the 4-plane/8-table default; see LshProbe for the
-    // config sweep). Bound it so regressions in bucketing/scoring surface.
+    // corpus (0.60 at the 4-plane/8-table default). Bound it so
+    // regressions in bucketing/scoring surface.
     assert(recall >= 0.55, s"LSH recall $recall fell below bound (exact=$exact approx=$approx)")
     all.unpersist()
   }

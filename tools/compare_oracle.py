@@ -4,7 +4,8 @@
 Oracle mode: reads Verify output (outDir/<name>/ parquet +
 outDir/oracle_sql.json), runs each oracle SQL in DuckDB over the same sf
 tables, and compares (columns sorted by name, values stringified, rows
-sorted).
+sorted). A declared oracle with no dump directory (its query crashed in
+Verify) is reported as [MISSING] and counts as a failure.
     compare_oracle.py <sfDir> <outDir>
 
 Two-dump mode: compares two Verify dumps (e.g. a parent commit against a
@@ -78,8 +79,12 @@ def compare_oracle(sfdir, outdir):
               "lineitem", "events", "documents", "embeddings"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    dump = read_dump(outdir)
     ok = fail = 0
-    for name, got in read_dump(outdir).items():
+    for name in sorted(set(oracle) - set(dump)):
+        print(f"[MISSING  ] {name}: oracle declared, no dump (query failed?)")
+        fail += 1
+    for name, got in dump.items():
         if name not in oracle:
             print(f"[rows-only] {name}: rows={len(got)}")
             continue
