@@ -130,7 +130,7 @@ object Bench {
     // `queries` stays the honest in-suite median, `requeried` carries
     // the isolated re-measure, so ambient noise separates from real
     // regressions inside the artifact itself.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val anchorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", outPath)
     val anchor: Map[String, Double] =
       try {

@@ -48,7 +48,7 @@ object SparkEntry {
       "src/main/scala/graft/dedup/Dedup.scala")
     case object Embeddings extends Family("Embeddings: ANN ladder, semantic dedup, retrieval ops",
       "src/main/scala/graft/similarity/Similarity.scala")
-    case object Retrieval extends Family("Lexical & hybrid retrieval (BM25, RRF)", text)
+    case object Retrieval extends Family("Lexical retrieval (BM25)", text)
     case object Text extends Family("Text analysis & curation", text)
     case object Mixture extends Family("Data mixture: DSIR, temperature, budgets", text)
     case object Sketches extends Family("Sketches: CMS, KMV, MG, histogram quantiles",
@@ -494,21 +494,6 @@ object SparkEntry {
         |SELECT user_id, epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM s GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin),
-    q("w4_mid_slice", (s, _) => HMRF.midSliceQuery(s))(
-      """WITH vox AS (
-        |  SELECT CAST(z.z AS INTEGER) AS z, CAST(y.y AS INTEGER) AS y, CAST(x.x AS INTEGER) AS x,
-        |    (z.z - 8) * (z.z - 8) * 1.5 + (y.y - 12) * (y.y - 12) + (x.x - 12) * (x.x - 12) AS d2
-        |  FROM range(0, 16) z(z), range(0, 24) y(y), range(0, 24) x(x)),
-        |masked AS (
-        |  SELECT z, y, x,
-        |    CASE WHEN d2 < 23.52 THEN 0 WHEN d2 < 37.3919 THEN 1 ELSE 2 END AS tl
-        |  FROM vox WHERE d2 < 49),
-        |v AS (
-        |  SELECT z, tl AS true_label,
-        |    0.25 + tl * 0.25 + ((z * 73 + y * 179 + x * 283 + 9337) % 2000 - 1000) / 1000.0 * 0.13 AS intensity
-        |  FROM masked)
-        |SELECT true_label, count(*) AS n, round(avg(intensity), 4) AS mean_intensity
-        |FROM v WHERE z = 8 GROUP BY 1 ORDER BY 1""".stripMargin),
     // sliding windows (each event in width/slide windows, expanded
     // map-side) and calendar gap-fill (dense time spine, zero-filled)
     // Sliding-window replay: a 2h/1h window means each event belongs
@@ -750,6 +735,11 @@ object SparkEntry {
     // local clustering coefficient: oriented wedge join keeping all
     // three triangle corners; cc = one exact IEEE division of ints
     q("graph_clustering", (s, d) => Graph.clusteringCoefficient(s, d))(Graph.clusteringOracle),
+    q("a13_largest_component", (s, _) => Components.largestComponentQuery(s))(
+      """SELECT CAST(y.y AS INTEGER) AS y, CAST(x.x AS INTEGER) AS x,
+        |  CAST(131 AS BIGINT) AS component, CAST(48 AS BIGINT) AS component_size
+        |FROM range(2, 10) y(y), range(3, 9) x(x)
+        |ORDER BY y, x""".stripMargin),
   ) ++ in(Family.Dedup,
     q("dedup_exact", (s, d) => Dedup.exactDedup(s, d))(
       """SELECT md5(lower(trim(text))) AS content_md5, min(doc_id) AS keeper_doc_id, count(*) AS n_copies
@@ -1114,7 +1104,6 @@ object SparkEntry {
     // integer-micro rel/sim scores make the greedy argmax chain
     // engine-exact; the oracle replays all k picks as unrolled CTEs
     q("emb_mmr_rerank", (s, d) => Similarity.mmrRerank(s, d))(Similarity.mmrOracleSql()),
-  ) ++ in(Family.Retrieval,
     // hybrid RAG retrieval: sparse (shared-token) + dense (cosine) legs
     // fused by reciprocal rank — integer leg ranks and exact IEEE
     // divisions keep the fused ordering oracle-exact
@@ -1156,14 +1145,6 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, cand_id) AS INTEGER) AS rank
         |  FROM fused) t
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    // BM25 lexical top-k: per-term float work rounded to integer
-    // micros BEFORE the sum, so the order-sensitive reduction runs in
-    // exact integer space and the ranking is engine-deterministic
-    q("search_bm25", (s, d) => TextAnalysis.bm25TopKQuery(s, d))(TextAnalysis.bm25OracleSql()),
-    // BM25 over the PERSISTED inverted index (postings bucketed by
-    // token + frozen stats side tables) — bit-identical to the fresh
-    // tokenization, so it shares search_bm25's oracle verbatim
-    q("search_bm25_served", (s, d) => TextAnalysis.bm25Served(s, d))(TextAnalysis.bm25OracleSql()),
     // rows-only by nature: the dense leg rides the persisted IVFADC
     // index (IVF probing has recall < 1, so no exact SQL oracle can
     // exist); SimilaritySpec replays the fusion in Scala bit-for-bit
@@ -1189,6 +1170,15 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS INTEGER) AS rank
         |  FROM quota) t
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+  ) ++ in(Family.Retrieval,
+    // BM25 lexical top-k: per-term float work rounded to integer
+    // micros BEFORE the sum, so the order-sensitive reduction runs in
+    // exact integer space and the ranking is engine-deterministic
+    q("search_bm25", (s, d) => TextAnalysis.bm25TopKQuery(s, d))(TextAnalysis.bm25OracleSql()),
+    // BM25 over the PERSISTED inverted index (postings bucketed by
+    // token + frozen stats side tables) — bit-identical to the fresh
+    // tokenization, so it shares search_bm25's oracle verbatim
+    q("search_bm25_served", (s, d) => TextAnalysis.bm25Served(s, d))(TextAnalysis.bm25OracleSql()),
   ) ++ in(Family.Text,
     // supervised ML as relational algebra: NB train+score+confusion
     // argmax margins are O(1e-2)+ while cross-engine libm noise on the
@@ -1791,6 +1781,35 @@ object SparkEntry {
     // DESC) argmax), so the oracle replays the profile table and the
     // tie-break exactly; TextSpec keeps the labeled-fixture checks
     q("txt_lang_id", (s, d) => TextAnalysis.languageId(s, d))(TextAnalysis.langIdOracleSql),
+    // per-source Welch t-test vs the rest of the corpus on EXACT
+    // integer sufficient statistics (one aggregate, complement by
+    // subtraction) — the mean-difference leg of the testing battery
+    q("stat_source_ttest", (s, d) => TextAnalysis.sourceTTest(s, d))(
+      """WITH per AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(n_chars) AS BIGINT) AS sx,
+        |    CAST(sum(n_chars * n_chars) AS BIGINT) AS sxx
+        |  FROM documents GROUP BY source),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS tn, CAST(sum(sx) AS BIGINT) AS tsx,
+        |        CAST(sum(sxx) AS BIGINT) AS tsxx FROM per),
+        |j AS (
+        |  SELECT p.source, p.n, p.sx, p.sxx,
+        |    t.tn - p.n AS nb, t.tsx - p.sx AS sxb, t.tsxx - p.sxx AS sxxb
+        |  FROM per p CROSS JOIN tot t
+        |  WHERE p.n >= 2 AND t.tn - p.n >= 2),
+        |c AS (
+        |  SELECT source, n,
+        |    CAST(sx AS DOUBLE) / n AS ma, CAST(sxb AS DOUBLE) / nb AS mb,
+        |    ((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) / (n - 1)) / n AS sea,
+        |    ((CAST(sxxb AS DOUBLE) - CAST(sxb AS DOUBLE) * CAST(sxb AS DOUBLE) / nb) / (nb - 1)) / nb AS seb,
+        |    nb
+        |  FROM j)
+        |SELECT source, n, round(ma, 2) AS mean_chars, round(mb, 2) AS mean_rest,
+        |  round((ma - mb) / sqrt(sea + seb), 4) AS t,
+        |  round((sea + seb) * (sea + seb) /
+        |    (sea * sea / (n - 1) + seb * seb / (nb - 1)), 2) AS df,
+        |  CAST(abs((ma - mb) / sqrt(sea + seb)) > 1.96 AS INTEGER) AS sig
+        |FROM c ORDER BY source""".stripMargin),
   ) ++ in(Family.Mixture,
     q("mix_rebalance", (s, d) => TextAnalysis.mixRebalance(s, d))(
       """WITH by_src AS (
@@ -2006,35 +2025,6 @@ object SparkEntry {
     q("sketch_kmv_agg", (s, d) => Events.kmvDistinctUsersAgg(s, d))(
       sameOracleAs("sketch_kmv_distinct")),
   ) ++ in(Family.Drift,
-    // per-source Welch t-test vs the rest of the corpus on EXACT
-    // integer sufficient statistics (one aggregate, complement by
-    // subtraction) — the mean-difference leg of the testing battery
-    q("stat_source_ttest", (s, d) => TextAnalysis.sourceTTest(s, d))(
-      """WITH per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(n_chars) AS BIGINT) AS sx,
-        |    CAST(sum(n_chars * n_chars) AS BIGINT) AS sxx
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS tn, CAST(sum(sx) AS BIGINT) AS tsx,
-        |        CAST(sum(sxx) AS BIGINT) AS tsxx FROM per),
-        |j AS (
-        |  SELECT p.source, p.n, p.sx, p.sxx,
-        |    t.tn - p.n AS nb, t.tsx - p.sx AS sxb, t.tsxx - p.sxx AS sxxb
-        |  FROM per p CROSS JOIN tot t
-        |  WHERE p.n >= 2 AND t.tn - p.n >= 2),
-        |c AS (
-        |  SELECT source, n,
-        |    CAST(sx AS DOUBLE) / n AS ma, CAST(sxb AS DOUBLE) / nb AS mb,
-        |    ((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) / (n - 1)) / n AS sea,
-        |    ((CAST(sxxb AS DOUBLE) - CAST(sxb AS DOUBLE) * CAST(sxb AS DOUBLE) / nb) / (nb - 1)) / nb AS seb,
-        |    nb
-        |  FROM j)
-        |SELECT source, n, round(ma, 2) AS mean_chars, round(mb, 2) AS mean_rest,
-        |  round((ma - mb) / sqrt(sea + seb), 4) AS t,
-        |  round((sea + seb) * (sea + seb) /
-        |    (sea * sea / (n - 1) + seb * seb / (nb - 1)), 2) AS df,
-        |  CAST(abs((ma - mb) / sqrt(sea + seb)) > 1.96 AS INTEGER) AS sig
-        |FROM c ORDER BY source""".stripMargin),
     q("ts_anomaly_hourly", (s, d) => Events.anomalyQuery(s, d))(
       """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -2227,11 +2217,6 @@ object SparkEntry {
       """SELECT event_type, round(avg(k), 4) AS avg_k, max(k) AS max_k, count(k) AS n_with_k
         |FROM (SELECT event_type, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k FROM events) t
         |GROUP BY 1 ORDER BY 1""".stripMargin),
-    q("a13_largest_component", (s, _) => Components.largestComponentQuery(s))(
-      """SELECT CAST(y.y AS INTEGER) AS y, CAST(x.x AS INTEGER) AS x,
-        |  CAST(131 AS BIGINT) AS component, CAST(48 AS BIGINT) AS component_size
-        |FROM range(2, 10) y(y), range(3, 9) x(x)
-        |ORDER BY y, x""".stripMargin),
     q("st2_events_per_hour", (s, d) => Events.eventsPerHour(s, d))(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
         |  count(*) AS n, round(avg(value), 4) AS avg_value
@@ -2681,6 +2666,21 @@ object SparkEntry {
         |  FROM px p JOIN clips c USING (img_id))
         |SELECT img_id, round(avg(v), 4) AS mean_v, round(min(v), 4) AS min_v, round(max(v), 4) AS max_v
         |FROM norm GROUP BY 1 ORDER BY img_id""".stripMargin),
+    q("w4_mid_slice", (s, _) => HMRF.midSliceQuery(s))(
+      """WITH vox AS (
+        |  SELECT CAST(z.z AS INTEGER) AS z, CAST(y.y AS INTEGER) AS y, CAST(x.x AS INTEGER) AS x,
+        |    (z.z - 8) * (z.z - 8) * 1.5 + (y.y - 12) * (y.y - 12) + (x.x - 12) * (x.x - 12) AS d2
+        |  FROM range(0, 16) z(z), range(0, 24) y(y), range(0, 24) x(x)),
+        |masked AS (
+        |  SELECT z, y, x,
+        |    CASE WHEN d2 < 23.52 THEN 0 WHEN d2 < 37.3919 THEN 1 ELSE 2 END AS tl
+        |  FROM vox WHERE d2 < 49),
+        |v AS (
+        |  SELECT z, tl AS true_label,
+        |    0.25 + tl * 0.25 + ((z * 73 + y * 179 + x * 283 + 9337) % 2000 - 1000) / 1000.0 * 0.13 AS intensity
+        |  FROM masked)
+        |SELECT true_label, count(*) AS n, round(avg(intensity), 4) AS mean_intensity
+        |FROM v WHERE z = 8 GROUP BY 1 ORDER BY 1""".stripMargin),
   ) ++ in(Family.Motion,
     q("motion_frame_stats", (s, _) => Motion.frameStatsQuery(s))(
       """WITH vel AS (

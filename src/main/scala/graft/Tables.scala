@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
   *
@@ -8,6 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vectorized parquet scans with predicate pushdown + column pruning —
   * the single most important scale lever at 100 TB (scan only the bytes
   * the query needs).
+  *
+  * Each table's schema is resolved once per JVM: Spark's parquet schema
+  * inference launches a 1-task job (40-70 ms) on every `spark.read`, so
+  * the inferred `StructType` is memoized per path and later reads pass it
+  * with `spark.read.schema(...)`, which launches no job. The memo outlives
+  * `spark.stop()` (catalog entries and Spark's file-status cache do not),
+  * so a new session in the same JVM reuses it too.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,9 +35,10 @@ object Tables {
     *    inference) TIMESTAMP_NTZ; NTZ is cast to TIMESTAMP, which under
     *    the UTC session every entry point pins is the same instant
     *    DuckDB reads.
-    * Setting the conf twice is benign — schema resolution happens
-    * eagerly on the same thread at `spark.read`, so there is no
-    * read-order race.
+    * The schema memo's key is the path, its `dataFingerprint` and the
+    * parquet-inference confs, this one included (see `schemaOf`); it
+    * is set before the lookup, so an events read never gets a schema
+    * inferred without it, and a regenerated file misses the memo.
     *
     * The session time zone is pinned UTC in the same guard: the
     * NTZ→TIMESTAMP cast (and every later date/hour function) resolves
@@ -57,18 +68,44 @@ object Tables {
     s"$len-$mtime"
   }
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      ensureNanosConf(spark)
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change what parquet inference returns for a file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private final case class Resolved(stamp: Seq[String], schema: StructType)
+
+  /** One entry per path (concurrent: the REST server reads from many
+    * threads); an entry whose stamp no longer matches is replaced. */
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  /** The inferred schema of `path`, memoized under its stamp: the data
+    * fingerprint (testdata is regenerated in place, with changed
+    * physical types) plus the current value of each inference conf. The
+    * fingerprint is taken before inferring, so files replaced mid-read
+    * leave an entry whose stamp the next read no longer matches. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val stamp = dataFingerprint(path) +: inferenceConfs.map(spark.conf.get)
+    val hit = resolved.get(path)
+    if (hit != null && hit.stamp == stamp) hit.schema
+    else {
+      val schema = spark.read.parquet(path).schema
+      resolved.put(path, Resolved(stamp, schema))
+      schema
     }
+  }
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    if (name == "events") ensureNanosConf(spark)
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => raw
+    }
+  }
 }
