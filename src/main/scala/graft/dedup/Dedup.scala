@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Layouts
 import graft.operators.Components
 
 /** Deduplication operators for a training-data pipeline (builder-prompt
@@ -327,25 +328,11 @@ object Dedup {
     * partitioning on band_key satisfies the (band_idx, band_key)
     * clustering both joins require. */
   def minhashBuildIndex(docs: DataFrame, table: String, numHashes: Int = 16,
-                        bands: Int = 4, nBuckets: Int = 0): Unit = {
-    val spark = docs.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      // clear a previous JVM's orphaned location (ivfpqBuildIndex contract)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
-    // nBuckets <= 0 → content-scaled (round-11): size from the banded
-    // row count so a 100× corpus builds a 100×-wider index, not 16
-    // fat buckets; the build checkpoints once so the sizing count is
-    // free of the shingle pipeline
-    val banded = bandedOf(shingles(docs, distinct = false), numHashes, bands).localCheckpoint()
-    val nb = if (nBuckets > 0) nBuckets
-             else graft.sources.Bucketed.autoBuckets(banded.count(),
-               spark.sparkContext.defaultParallelism)
-    graft.sources.Bucketed.writeBucketed(banded, table, "band_key", nb)
-  }
+                        bands: Int = 4): Unit =
+    // the checkpoint keeps the bucket sizing count off the shingle
+    // pipeline
+    Layouts.save(bandedOf(shingles(docs, distinct = false), numHashes, bands)
+      .localCheckpoint(), table, Some("band_key"))
 
   /** Incremental near-dup — the nightly-delta shape a live corpus
     * runs: shingle ONLY the new documents, emit every candidate pair
@@ -386,8 +373,7 @@ object Dedup {
       .localCheckpoint()
     // append reuses the table's build-time bucket count (the spec must
     // match the catalog's for the zero-exchange contract to survive)
-    graft.sources.Bucketed.writeBucketed(dl, table, "band_key",
-      graft.sources.Bucketed.tableBuckets(spark, table), mode = "append")
+    Layouts.save(dl, table, Some("band_key"), append = true)
     spark.catalog.refreshTable(table)
     result
   }
@@ -402,23 +388,9 @@ object Dedup {
     * bucketed by fp — the exact-rung twin of the minhash band index.
     * A live corpus probes and appends it in O(delta) instead of
     * re-fingerprinting history nightly. */
-  def exactBuildIndex(docs: DataFrame, table: String, nBuckets: Int = 0): Unit = {
-    val spark = docs.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      // clear a previous JVM's orphaned location (ivfpqBuildIndex contract)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
-    // nBuckets <= 0 → content-scaled from the keeper-row count
-    val keepers = docs.groupBy(fingerprint(col("text")).as("fp"))
-      .agg(min("doc_id").as("keeper_id")).localCheckpoint()
-    val nb = if (nBuckets > 0) nBuckets
-             else graft.sources.Bucketed.autoBuckets(keepers.count(),
-               spark.sparkContext.defaultParallelism)
-    graft.sources.Bucketed.writeBucketed(keepers, table, "fp", nb)
-  }
+  def exactBuildIndex(docs: DataFrame, table: String): Unit =
+    Layouts.save(docs.groupBy(fingerprint(col("text")).as("fp"))
+      .agg(min("doc_id").as("keeper_id")).localCheckpoint(), table, Some("fp"))
 
   /** Keeper decisions for a DELTA batch against the index, with
     * UNION-corpus semantics: a delta doc's keeper is the global
@@ -451,8 +423,7 @@ object Dedup {
     val d = delta.groupBy(fingerprint(col("text")).as("fp"))
       .agg(min("doc_id").as("keeper_id"))
     val fresh = d.join(spark.table(table).select("fp"), Seq("fp"), "left_anti")
-    graft.sources.Bucketed.writeBucketed(fresh, table, "fp",
-      graft.sources.Bucketed.tableBuckets(spark, table), mode = "append")
+    Layouts.save(fresh, table, Some("fp"), append = true)
   }
 
   /** Driver-surface form: index = docs with doc_id % 10 != 9 (built
@@ -460,12 +431,10 @@ object Dedup {
     * keeper decisions must equal the whole-corpus exact dedup, which
     * is what the SQL oracle checks directly. */
   def exactServedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.Tables.dataFingerprint(s"$dir/documents.parquet")
-    val table = graft.sources.Layouts.name("graft_exactfp", dir, s"$dir|$fp|exactfp")
-    val docs = graft.Tables(spark, dir, "documents")
-    if (!spark.catalog.tableExists(table)) {
-      graft.sources.Layouts.pruneStale(spark, "graft_exactfp", dir, table)
-      exactBuildIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 9), table)
+    val fp = Tables.dataFingerprint(s"$dir/documents.parquet")
+    val docs = Tables(spark, dir, "documents")
+    val table = Layouts.ensure(spark, "graft_exactfp", dir, s"$dir|$fp|exactfp") {
+      exactBuildIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 9), _)
     }
     exactServedKeep(spark, table, docs.filter(pmod(col("doc_id"), lit(10)) === 9))
   }

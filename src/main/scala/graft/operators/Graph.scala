@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.Layouts
 
 /** Iterative graph analytics over relations (north-star surface — the
   * reference has per-image connected components in `Components`; this
@@ -54,62 +55,30 @@ object Graph {
   // parity).
   // -----------------------------------------------------------------
 
-  private val layoutLock = new Object
-
-  /** Deterministic catalog-safe table name per (dir, data, variant) —
-    * the same content-fingerprint contract as the BM25/IVFADC index
-    * prefixes: regenerated testdata under the same path triggers a
-    * fresh build instead of serving stale edges across JVMs.
-    *
-    * The name is structured `<variant>_<dirtag>_<fptag>` (round-11,
-    * the shared [[graft.sources.Layouts]] scheme): the dir and the
-    * content fingerprint hash SEPARATELY, so a build can recognize —
-    * and prune — a stale fingerprint of the SAME source dir without
-    * ever touching another sf dir's live layout. */
-  private[graft] def edgeDirTag(dir: String): String =
-    graft.sources.Layouts.dirTag(dir)
-  private def edgeTableName(dir: String, variant: String): String = {
-    // both fact tables feed some variant (hits uses orders⋈lineitem),
-    // so the name folds both fingerprints — either regenerating
-    // invalidates every edge layout
+  /** Content key of an edge variant — the same fingerprint contract as
+    * the BM25/IVFADC index prefixes: regenerated testdata under the same
+    * path triggers a fresh build instead of serving stale edges across
+    * JVMs. Both fact tables feed some variant (hits uses
+    * orders⋈lineitem), so the key folds both fingerprints — either
+    * regenerating invalidates every edge layout. */
+  private def edgeKey(dir: String, variant: String): String = {
     val fp = Tables.dataFingerprint(s"$dir/lineitem.parquet") + "|" +
       Tables.dataFingerprint(s"$dir/orders.parquet")
-    graft.sources.Layouts.name(s"graft_edges_$variant", dir,
-      s"$dir|$fp|edges|$variant")
+    s"$dir|$fp|edges|$variant"
   }
 
-  /** Stale-fingerprint prune for this (dir, variant) — the shared
-    * [[graft.sources.Layouts.pruneStale]] hygiene (round-11 ADVICE). */
-  private[graft] def dropStaleSiblings(spark: SparkSession, dir: String,
-                                       variant: String, keep: String): Unit =
-    graft.sources.Layouts.pruneStale(spark, s"graft_edges_$variant", dir, keep)
-
-  /** Memoized bucketed materialization: builds `build` into the
-    * catalog on first use per (dir, content, variant), returns the
-    * table-backed DataFrame. Orphaned warehouse dirs from a previous
-    * JVM are cleared first (the saveAsTable contract shared with
-    * `bm25BuildIndex`), stale-fingerprint siblings of the same
-    * (dir, variant) pruned. Bucket count is content-scaled
-    * ([[graft.sources.Bucketed.autoBuckets]]) — the build checkpoints
-    * the relation once so the sizing count does not recompute the
-    * derivation. */
+  /** Memoized bucketed materialization ([[graft.sources.Layouts]]):
+    * builds `build` into the catalog on first use per (dir, content,
+    * variant), bucketed by `key`, and returns the table-backed
+    * DataFrame. The build checkpoints the relation once so the bucket
+    * sizing count does not recompute the derivation. */
   private def edgeRel(spark: SparkSession, dir: String, variant: String,
                       key: String)
-                     (build: => DataFrame): DataFrame = layoutLock.synchronized {
-    val table = edgeTableName(dir, variant)
-    if (!spark.catalog.tableExists(table)) {
-      dropStaleSiblings(spark, dir, variant, table)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-      val rel = build.localCheckpoint()
-      graft.sources.Bucketed.writeBucketed(rel, table, key,
-        graft.sources.Bucketed.autoBuckets(rel.count(),
-          spark.sparkContext.defaultParallelism))
-    }
-    spark.table(table)
-  }
+                     (build: => DataFrame): DataFrame =
+    spark.table(Layouts.ensure(spark, s"graft_edges_$variant", dir,
+        edgeKey(dir, variant)) { t =>
+      Layouts.save(build.localCheckpoint(), t, Some(key))
+    })
 
   // -----------------------------------------------------------------
   // Data-driven state-side join strategy (round-11). Every per-round
@@ -168,7 +137,7 @@ object Graph {
   private val nodeCountCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
   private def bipartiteNodeCount(spark: SparkSession, dir: String): Long =
-    nodeCountCache.getOrElseUpdate(edgeTableName(dir, "bi"),
+    nodeCountCache.getOrElseUpdate(edgeKey(dir, "bi"),
       bipartiteLinked(spark, dir).select(countDistinct(col("a"))).head().getLong(0))
 
   /** Memoized edge-row counts per content-fingerprinted edge table —
@@ -180,7 +149,7 @@ object Graph {
     scala.collection.concurrent.TrieMap.empty[String, Long]
   private def sparseEdgeCount(spark: SparkSession, dir: String,
                               cutoff: String): Long =
-    edgeCountCache.getOrElseUpdate(edgeTableName(dir, s"cc$cutoff"),
+    edgeCountCache.getOrElseUpdate(edgeKey(dir, s"cc$cutoff"),
       sparseEdges(spark, dir, cutoff).count())
 
   /** Symmetric part↔supplier edges pre-joined with source degree —
@@ -400,49 +369,37 @@ object Graph {
     * the same (degree, id) rank the orientation uses — ordering by raw
     * id would look for closing edges against their orientation and
     * silently undercount (caught by GraphSpec's K4 hand-count). */
-  private def copurLayout(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    layoutLock.synchronized {
-      val oriTable = edgeTableName(dir, "copur")
-      val degTable = edgeTableName(dir, "copurdeg")
-      if (!spark.catalog.tableExists(oriTable) || !spark.catalog.tableExists(degTable)) {
-        dropStaleSiblings(spark, dir, "copur", oriTable)
-        dropStaleSiblings(spark, dir, "copurdeg", degTable)
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        for (t <- Seq(oriTable, degTable) if !spark.catalog.tableExists(t)) {
-          val path = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
-          val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(path)) fs.delete(path, true)
-        }
-        val pp = Tables(spark, dir, "lineitem")
-          .filter(
-            substring(md5(concat(lit("tri:"), col("l_orderkey").cast("string"))), 1, 2) < "80")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val x = pp.as("x"); val y = pp.as("y")
-        val e = x.join(y, col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("u"), col("y.p").as("v"))
-          .distinct()
-          .localCheckpoint()
-        e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("d"))
-          .write.mode("overwrite").format("parquet").saveAsTable(degTable)
-        val deg = spark.table(degTable)
-        val oriented = e
-          .join(deg.withColumnRenamed("node", "u").withColumnRenamed("d", "du"), "u")
-          .join(deg.withColumnRenamed("node", "v").withColumnRenamed("d", "dv"), "v")
-          .select(
-            when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("u"))
-              .otherwise(col("v")).as("a"),
-            when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("v"))
-              .otherwise(col("u")).as("b"),
-            when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("dv"))
-              .otherwise(col("du")).as("bd"))
-        graft.sources.Bucketed.writeBucketed(oriented, oriTable, "a",
-          graft.sources.Bucketed.autoBuckets(e.count(),
-            spark.sparkContext.defaultParallelism))
-      }
-      (spark.table(oriTable), spark.table(degTable))
+  private def copurLayout(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ori = Layouts.ensure(spark, "graft_edges_copur", dir, edgeKey(dir, "copur"),
+        Seq("", "_deg")) { t =>
+      val pp = Tables(spark, dir, "lineitem")
+        .filter(
+          substring(md5(concat(lit("tri:"), col("l_orderkey").cast("string"))), 1, 2) < "80")
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+        .distinct()
+      val x = pp.as("x"); val y = pp.as("y")
+      val e = x.join(y, col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+        .select(col("x.p").as("u"), col("y.p").as("v"))
+        .distinct()
+        .localCheckpoint()
+      Layouts.save(e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("d")), s"${t}_deg")
+      val deg = spark.table(s"${t}_deg")
+      val oriented = e
+        .join(deg.withColumnRenamed("node", "u").withColumnRenamed("d", "du"), "u")
+        .join(deg.withColumnRenamed("node", "v").withColumnRenamed("d", "dv"), "v")
+        .select(
+          when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("u"))
+            .otherwise(col("v")).as("a"),
+          when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("v"))
+            .otherwise(col("u")).as("b"),
+          when(orientLow(col("u"), col("v"), col("du"), col("dv")), col("dv"))
+            .otherwise(col("du")).as("bd"))
+      // the orientation joins are 1:1 on e, whose count is the cheap job
+      Layouts.save(oriented, t, Some("a"), rowCount = Some(e.count()))
     }
+    (spark.table(ori), spark.table(s"${ori}_deg"))
+  }
 
   /** Oriented triangle count over the co-purchase graph (parts
     * appearing in the same order, orders hash-sampled at ~50%).
@@ -951,9 +908,9 @@ object Graph {
     // per-side node counts, memoized per content fingerprint — they
     // gate the state-side hint (stateSide) and are the final
     // normalizers, replacing the two end-of-loop count() actions
-    val nh = nodeCountCache.getOrElseUpdate(edgeTableName(dir, "hits") + "|src",
+    val nh = nodeCountCache.getOrElseUpdate(edgeKey(dir, "hits") + "|src",
       edges.select(countDistinct(col("src"))).head().getLong(0))
-    val na = nodeCountCache.getOrElseUpdate(edgeTableName(dir, "hits") + "|dst",
+    val na = nodeCountCache.getOrElseUpdate(edgeKey(dir, "hits") + "|dst",
       edges.select(countDistinct(col("dst"))).head().getLong(0))
     var hub = edges.select(col("src").as("node")).distinct()
       .withColumn("hub", lit(1.0).cast("double"))

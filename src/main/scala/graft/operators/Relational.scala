@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.Layouts
 
 /** Relational operator surface (SURVEY.md §2.1–§2.8): scans, filters,
   * joins, aggregations, windows, sorts, set ops, scalar functions.
@@ -1387,39 +1388,26 @@ object Relational {
       .orderBy("key_column")
   }
 
-  /** Deterministic catalog-safe MV name per source dir. */
-  private def mvName(dir: String, split: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$split".getBytes("UTF-8"))
-    "graft_mv_rev_" + md.take(5).map("%02x".format(_)).mkString
-  }
-
   /** Incremental materialized-view maintenance: per-customer order
     * count + revenue, maintained as persisted PARTIAL aggregates
     * (sum/count commute with merge) plus a delta scan — the standard
     * incremental-pipeline shape where yesterday's 100 TB is never
     * re-aggregated, only the new partition is. The base aggregate over
-    * orders strictly before `split` is written once per source dir
-    * (catalog-memoized, same immutable-dir contract as the persisted
-    * ANN index); each run aggregates only the delta (>= split) and
-    * merges partials with a second tiny hash agg. The oracle recomputes
-    * the full aggregate from scratch — merged partials must match it
-    * exactly. */
+    * orders strictly before `split` is written once per (source dir,
+    * orders fingerprint, split) as a [[graft.sources.Layouts]] table, so
+    * an orders.parquet rewritten in place gets a fresh base; each run
+    * aggregates only the delta (>= split) and merges partials with a
+    * second tiny hash agg. The oracle recomputes the full aggregate
+    * from scratch — merged partials must match it exactly. */
   def mvIncrementalRevenue(spark: SparkSession, dir: String,
                            split: String = "1998-07-01"): DataFrame = {
-    val table = mvName(dir, split)
-    if (!spark.catalog.tableExists(table)) {
-      // clear a stray warehouse dir left by a previous JVM (the
-      // in-memory catalog forgets tables across sessions)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-      Tables(spark, dir, "orders")
+    val fp = Tables.dataFingerprint(s"$dir/orders.parquet")
+    val table = Layouts.ensure(spark, "graft_mv_rev", dir,
+        s"$dir|$fp|$split") { t =>
+      Layouts.save(Tables(spark, dir, "orders")
         .filter(col("o_orderdate") < lit(split))
         .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_part"), sum("o_totalprice").as("rev_part"))
-        .write.mode("overwrite").format("parquet").saveAsTable(table)
+        .agg(count(lit(1)).as("n_part"), sum("o_totalprice").as("rev_part")), t)
     }
     val delta = Tables(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit(split))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.Layouts
 import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table (builder-prompt north
@@ -671,49 +672,21 @@ object Similarity {
     * After this, a query pays LUT construction + ADC over
     * ~nProbe/nlist of the code table — the corpus-proportional
     * encode cost moves out of the query path entirely (it was the
-    * documented 12× linear profile in the round-7 10× probe).
-    * `nBuckets` sizes the on-disk bucketing: at production scale set
-    * it ~nlist/4 so a probed list maps to O(1) buckets; left at 0 it
-    * content-scales from the corpus row count (round-11). */
+    * documented 12× linear profile in the round-7 10× probe). The
+    * code table's bucket count content-scales from its row count
+    * ([[Layouts.save]]). */
   def ivfpqBuildIndex(all: DataFrame, prefix: String, nlist: Int = 0, m: Int = 16,
-                      ksub: Int = 16, nBuckets: Int = 0): Unit = {
+                      ksub: Int = 16): Unit = {
     val spark = all.sparkSession
     import spark.implicits._
-    // a previous JVM's build leaves warehouse directories behind while
-    // the in-memory catalog forgets the tables; saveAsTable refuses to
-    // create a managed table over a non-empty stray location, so clear
-    // orphaned locations (catalog-registered tables overwrite fine)
-    Seq("codes", "centroids", "books").foreach { suffix =>
-      val table = s"${prefix}_$suffix"
-      if (!spark.catalog.tableExists(table)) {
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-    }
     val (cent, books) = ivfpqTrain(all, nlist, m, ksub)
-    val codes = ivfpqEncode(all, cent, books).localCheckpoint()
-    val nb = if (nBuckets > 0) nBuckets
-             else graft.sources.Bucketed.autoBuckets(codes.count(),
-               spark.sparkContext.defaultParallelism)
-    graft.sources.Bucketed.writeBucketed(codes, s"${prefix}_codes", "list_id", nb)
-    cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "cvec")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_centroids")
-    books.zipWithIndex.flatMap { case (b, j) =>
+    Layouts.save(ivfpqEncode(all, cent, books).localCheckpoint(), s"${prefix}_codes",
+      Some("list_id"))
+    Layouts.save(cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list_id", "cvec"), s"${prefix}_centroids")
+    Layouts.save(books.zipWithIndex.flatMap { case (b, j) =>
         b.zipWithIndex.map { case (c, code) => (j, code, c.toSeq) } }.toSeq
-      .toDF("subspace", "code", "cvec")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_books")
-  }
-
-  /** Deterministic catalog-safe index name per (dir, data, params):
-    * the embedded content fingerprint makes an in-place testdata
-    * regeneration build a fresh index rather than serve stale frozen
-    * codebooks (same contract as the BM25 prefix). */
-  private def indexPrefix(dir: String, nlist: Int, m: Int, ksub: Int): String = {
-    val fp = graft.Tables.dataFingerprint(s"$dir/embeddings.parquet")
-    graft.sources.Layouts.name("graft_ivfpq", dir, s"$dir|$fp|$nlist|$m|$ksub")
+      .toDF("subspace", "code", "cvec"), s"${prefix}_books")
   }
 
   /** IVFADC over the PERSISTED index — the serving path: builds the
@@ -760,28 +733,26 @@ object Similarity {
     * the persisted layout. */
   def ivfpqAppend(spark: SparkSession, prefix: String, delta: DataFrame): Unit = {
     val (cent, books) = readIndexArtifacts(spark, prefix)
-    graft.sources.Bucketed.writeBucketed(
-      ivfpqEncode(delta, cent, books), s"${prefix}_codes", "list_id",
-      graft.sources.Bucketed.tableBuckets(spark, s"${prefix}_codes"),
-      mode = "append")
+    Layouts.save(ivfpqEncode(delta, cent, books), s"${prefix}_codes", Some("list_id"),
+      append = true)
   }
 
   /** Ensure the persisted IVFADC index for `dir` exists in the catalog
     * and return its prefix — the handle batch AND streaming serving
-    * callers probe (build-once contract; see ivfpqBuildIndex). */
+    * callers probe (build-once contract; see ivfpqBuildIndex). The
+    * prefix carries the content fingerprint of embeddings.parquet and
+    * the parameters, so an in-place testdata regeneration builds a fresh
+    * index rather than serve stale frozen codebooks. A DIFFERENT
+    * (nlist, m, ksub) on the same data also reads as superseded and is
+    * pruned: parameter sets don't coexist per dir, which matches the
+    * serving contract (retrain = rebuild under a new fingerprint). */
   def ensureIndex(spark: SparkSession, dir: String, nlist: Int = 0,
                   m: Int = 16, ksub: Int = 16): String = {
-    val prefix = indexPrefix(dir, nlist, m, ksub)
-    if (!spark.catalog.tableExists(s"${prefix}_codes")) {
-      // prune superseded fingerprints of this dir (shared Layouts
-      // hygiene) — note a DIFFERENT (nlist, m, ksub) on the same data
-      // also reads as superseded; parameter sets don't coexist per
-      // dir, which matches the serving contract (retrain = rebuild
-      // under a new fingerprint)
-      graft.sources.Layouts.pruneStale(spark, "graft_ivfpq", dir, prefix)
-      ivfpqBuildIndex(corpus(spark, dir), prefix, nlist, m, ksub)
+    val fp = Tables.dataFingerprint(s"$dir/embeddings.parquet")
+    Layouts.ensure(spark, "graft_ivfpq", dir, s"$dir|$fp|$nlist|$m|$ksub",
+        Seq("_codes", "_centroids", "_books")) {
+      ivfpqBuildIndex(corpus(spark, dir), _, nlist, m, ksub)
     }
-    prefix
   }
 
   def ivfpqServedTopK(spark: SparkSession, dir: String, nQueries: Int = 5, k: Int = 3,

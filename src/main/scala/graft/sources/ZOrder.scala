@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) layout for multi-dimensional file pruning
-  * (SURVEY §3.3 scale layouts, alongside `Bucketed`/`SkewJoin`).
+  * (SURVEY §3.3 scale layouts, alongside `Layouts`/`SkewJoin`).
   *
   * A table range-partitioned on ONE column prunes scans that filter on
   * that column and nothing else: sorting by x makes every file span

@@ -35,14 +35,7 @@ object StreamScd2 {
     * underlying change set, then re-derive every interval. Pure —
     * shared by the sink and by permutation/replay tests. */
   def mergeHistory(spark: SparkSession, table: String, changes: DataFrame): Unit = {
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
-    val cur = if (exists) Some(spark.table(table).select(changeCols: _*)) else None
+    val cur = if (spark.catalog.tableExists(table)) Some(spark.table(table).select(changeCols: _*)) else None
     val all = cur.map(_.unionByName(changes.select(changeCols: _*)))
       .getOrElse(changes.select(changeCols: _*))
       .dropDuplicates("key", "ts", "seq")
@@ -50,7 +43,7 @@ object StreamScd2 {
     val history = all
       .withColumn("valid_to", lead(col("ts"), 1).over(w))
       .localCheckpoint() // detach from the table files before overwrite
-    history.write.mode("overwrite").format("parquet").saveAsTable(table)
+    graft.sources.Layouts.save(history, table)
     spark.catalog.refreshTable(table)
   }
 

@@ -39,17 +39,7 @@ object StreamUpsert {
     * sink and by tests replaying feeds in arbitrary order. */
   def mergeChanges(spark: SparkSession, table: String, changes: DataFrame): Unit = {
     val cols = Seq("key", "op", "val", "ts", "seq").map(col)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      // a previous JVM's run can leave warehouse files behind while the
-      // in-memory catalog forgot the table; saveAsTable refuses to
-      // create over a stray location (the ivfpqBuildIndex contract)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
-    val cur = if (exists) Some(spark.table(table).select(cols: _*)) else None
+    val cur = if (spark.catalog.tableExists(table)) Some(spark.table(table).select(cols: _*)) else None
     val unioned = cur.map(_.unionByName(changes.select(cols: _*)))
       .getOrElse(changes.select(cols: _*))
     val w = Window.partitionBy("key")
@@ -59,7 +49,7 @@ object StreamUpsert {
       .filter(col("rn") === 1)
       .drop("rn")
       .localCheckpoint() // detach from the table files before overwrite
-    merged.write.mode("overwrite").format("parquet").saveAsTable(table)
+    graft.sources.Layouts.save(merged, table)
     // the overwrite replaces files under the table location; drop the
     // session's cached file listing so the next read lists fresh
     spark.catalog.refreshTable(table)

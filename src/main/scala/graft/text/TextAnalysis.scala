@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Layouts
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token counting, quality scoring, language ID,
@@ -658,17 +659,6 @@ object TextAnalysis {
       .orderBy("query_id", "rank")
   }
 
-  private def bm25IndexPrefix(dir: String): String = {
-    // the prefix carries a content fingerprint of the source table, so
-    // a regenerated documents.parquet under the same path triggers a
-    // fresh build — 'bit-identical to fresh tokenization' holds across
-    // JVMs even after in-place testdata refreshes; the shared Layouts
-    // scheme (dir tag + fp tag) lets the build prune superseded
-    // fingerprints' dirs without touching other sf dirs' live indexes
-    val fp = graft.Tables.dataFingerprint(s"$dir/documents.parquet")
-    graft.sources.Layouts.name("graft_bm25", dir, s"$dir|$fp|bm25")
-  }
-
   /** Persisted inverted-index build — the sparse-side twin of the
     * IVFADC serving layout: the postings relation (doc_id, token, tf)
     * written once, BUCKETED by token so query-term joins read only
@@ -677,50 +667,35 @@ object TextAnalysis {
     * retokenize; stats are frozen with the index (the standard serving
     * contract — stale df after appends is a rebuild decision, not a
     * query-time one). */
-  def bm25BuildIndex(docs: DataFrame, prefix: String, nBuckets: Int = 0): Unit = {
-    val spark = docs.sparkSession
-    // clear orphaned warehouse dirs from a previous JVM (same
-    // contract as the IVFADC build)
-    Seq("postings", "docstats", "termstats", "corpus").foreach { suffix =>
-      val table = s"${prefix}_$suffix"
-      if (!spark.catalog.tableExists(table)) {
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
-    }
+  def bm25BuildIndex(docs: DataFrame, prefix: String): Unit = {
     val tok = docs.select(col("doc_id"),
       explode(filter(tokens(col("text")), t => length(t) > 0)).as("token"))
-    // nBuckets <= 0 → content-scaled from the postings row count
-    // (round-11); the checkpoint keeps the sizing count and the
-    // termstats aggregate off a re-tokenization
+    // the checkpoint keeps the bucket sizing count and the termstats
+    // aggregate off a re-tokenization
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
-    val nb = if (nBuckets > 0) nBuckets
-             else graft.sources.Bucketed.autoBuckets(tf.count(),
-               spark.sparkContext.defaultParallelism)
-    graft.sources.Bucketed.writeBucketed(tf, s"${prefix}_postings", "token", nb)
-    tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_docstats")
-    tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_termstats")
-    tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_corpus")
+    Layouts.save(tf, s"${prefix}_postings", Some("token"))
+    Layouts.save(tok.groupBy("doc_id").agg(count(lit(1)).as("dl")), s"${prefix}_docstats")
+    Layouts.save(tf.groupBy("token").agg(count(lit(1)).as("df")), s"${prefix}_termstats")
+    Layouts.save(tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+      .agg(countDistinct(col("doc_id")).as("n_docs"), avg(col("dl")).as("avgdl")),
+      s"${prefix}_corpus")
   }
+
+  private val bm25Tables = Seq("_postings", "_docstats", "_termstats", "_corpus")
 
   /** BM25 over the persisted index: queries pay the postings join and
     * scoring only — tokenization and corpus statistics are index-build
     * work, exactly like the dense leg's codebooks. Bit-identical to
     * [[bm25TopK]] (same relations, same scoring core), so the gate
-    * runs it against the SAME oracle. */
+    * runs it against the SAME oracle. The index name carries a content
+    * fingerprint of documents.parquet, so a regenerated table under the
+    * same path gets a fresh build. */
   def bm25Served(spark: SparkSession, dir: String, nQueries: Int = 5, k: Int = 5,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val prefix = bm25IndexPrefix(dir)
-    if (!spark.catalog.tableExists(s"${prefix}_postings")) {
-      graft.sources.Layouts.pruneStale(spark, "graft_bm25", dir, prefix)
-      bm25BuildIndex(Tables(spark, dir, "documents"), prefix)
+    val fp = Tables.dataFingerprint(s"$dir/documents.parquet")
+    val prefix = Layouts.ensure(spark, "graft_bm25", dir, s"$dir|$fp|bm25", bm25Tables) {
+      bm25BuildIndex(Tables(spark, dir, "documents"), _)
     }
     bm25Score(
       spark.table(s"${prefix}_postings"),
@@ -1320,7 +1295,7 @@ object TextAnalysis {
     * value, and the layout a serving system ships anyway). Two hash
     * aggregations; per-token state is bounded by the posting cap. At
     * full scale the uncapped index is written bucketed by token
-    * (Bucketed.scala) instead of capped — this query is the per-token
+    * (Layouts.save) instead of capped — this query is the per-token
     * summary + head view of that relation. */
   def invertedIndex(docs: DataFrame, cap: Int = 10): DataFrame =
     docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))

@@ -198,14 +198,8 @@ class PlanContractSpec extends AnyFunSuite {
     // — the 100-TB layout contract for this table.
     import graft.operators.Temporal
     val table = "graft_events_bucketed_fixture"
-    if (!spark.catalog.tableExists(table)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-      graft.sources.Bucketed.writeBucketed(
-        Tables(spark, sf, "events"), table, "user_id", 8)
-    }
+    if (!spark.catalog.tableExists(table))
+      graft.sources.Layouts.save(Tables(spark, sf, "events"), table, Some("user_id"))
     val ev = spark.table(table)
     val plans = Map(
       "sessionize" -> Temporal.sessionize(ev),

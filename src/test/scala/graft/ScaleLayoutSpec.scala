@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SkewJoin
-import graft.sources.Bucketed
+import graft.sources.Layouts
 
 /** Scale-layout contracts: bucketed tables join without exchanges, and
   * the salted skew join is row-identical to the plain join while
@@ -18,14 +18,18 @@ class ScaleLayoutSpec extends AnyFunSuite {
     val orders = Tables(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     val customer = Tables(spark, sf, "customer").select("c_custkey", "c_name")
       .withColumnRenamed("c_custkey", "o_custkey")
-    Bucketed.writeBucketed(orders, "orders_b", "o_custkey", 8)
-    Bucketed.writeBucketed(customer, "customer_b", "o_custkey", 8)
+    Layouts.save(orders, "orders_b", Some("o_custkey"))
+    Layouts.save(customer, "customer_b", Some("o_custkey"))
+    assert(Layouts.tableBuckets(spark, "orders_b") === Layouts.tableBuckets(spark, "customer_b"),
+      "both sides must share one bucket count")
     // force the join down the sort-merge path so the exchange elision
     // (not broadcast) is what's being proven
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketed.bucketedJoin(spark, "orders_b", "customer_b", "o_custkey")
+      // same bucket count on both sides: the planner proves
+      // co-partitioning from the catalog, zero-exchange sort-merge join
+      val joined = spark.table("orders_b").join(spark.table("customer_b"), Seq("o_custkey"))
       val n = joined.count()
       assert(n > 0, "join must produce rows")
       val plan = joined.queryExecution.executedPlan.toString
@@ -106,28 +110,29 @@ class ScaleLayoutSpec extends AnyFunSuite {
     // — 32 buckets beat 64/128/256 on the 11.8M-row 10× edge relation
     // — so the floor is the cluster parallelism and the 500k-row
     // target only widens the layout beyond it.
-    assert(Bucketed.autoBuckets(0L) === 32, "empty/small → parallelism floor")
-    assert(Bucketed.autoBuckets(1200000L) === 32, "sf0.1 edges stay at the floor")
-    assert(Bucketed.autoBuckets(11800000L) === 32,
+    assert(Layouts.autoBuckets(0L) === 32, "empty/small → parallelism floor")
+    assert(Layouts.autoBuckets(1200000L) === 32, "sf0.1 edges stay at the floor")
+    assert(Layouts.autoBuckets(11800000L) === 32,
       "the 10× edge relation must choose the measured-best 32")
-    assert(Bucketed.autoBuckets(118000000L) === 256,
+    assert(Layouts.autoBuckets(118000000L) === 256,
       "100× data → wider layout, same per-bucket size as 10×'s 32")
-    assert(Bucketed.autoBuckets(Long.MaxValue / 4) === 4096, "small-file cap")
-    assert(Bucketed.autoBuckets(0L, floor = 8) === 8, "floor follows the cluster width")
+    assert(Layouts.autoBuckets(Long.MaxValue / 4) === 4096, "small-file cap")
+    assert(Layouts.autoBuckets(0L, floor = 8) === 8, "floor follows the cluster width")
     // snapped to powers of two so co-bucketed pairs stay join-compatible
     for (r <- Seq(60000L, 777777L, 50000000L))
-      assert(Integer.bitCount(Bucketed.autoBuckets(r)) === 1, s"$r not a pow2")
+      assert(Integer.bitCount(Layouts.autoBuckets(r)) === 1, s"$r not a pow2")
   }
 
   test("tableBuckets reads back the build-time count; appends must reuse it") {
     val df = spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("v"))
-    Bucketed.writeBucketed(df, "tb_probe", "k", 8)
+    Layouts.save(df, "tb_probe", Some("k"))
     try {
-      assert(Bucketed.tableBuckets(spark, "tb_probe") === 8)
-      // an append through the read-back count keeps the spec valid
-      Bucketed.writeBucketed(df.filter(col("k") < 10), "tb_probe", "k",
-        Bucketed.tableBuckets(spark, "tb_probe"), mode = "append")
+      // the test session runs local[8]: 1000 rows → the parallelism floor
+      assert(Layouts.tableBuckets(spark, "tb_probe") === 8)
+      // an append reads the count back from the catalog and keeps the spec valid
+      Layouts.save(df.filter(col("k") < 10), "tb_probe", Some("k"), append = true)
       assert(spark.table("tb_probe").count() === 1010)
+      assert(Layouts.tableBuckets(spark, "tb_probe") === 8)
     } finally spark.sql("DROP TABLE IF EXISTS tb_probe")
   }
 
@@ -135,14 +140,14 @@ class ScaleLayoutSpec extends AnyFunSuite {
     import org.apache.hadoop.fs.Path
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = graft.operators.Graph.edgeDirTag(sf)
+    val tag = Layouts.dirTag(sf)
     val staleSameDir = s"graft_edges_bi_${tag}_0000000000"
     val otherDir = "graft_edges_bi_ffffff_0000000000"
     val legacy = "graft_edges_bi_0123456789"
     val live = s"graft_edges_bi_${tag}_aaaaaaaaaa"
     for (d <- Seq(staleSameDir, otherDir, legacy, live)) fs.mkdirs(new Path(wh, d))
     try {
-      graft.operators.Graph.dropStaleSiblings(spark, sf, "bi", live)
+      Layouts.pruneStale(spark, "graft_edges_bi", sf, live)
       assert(!fs.exists(new Path(wh, staleSameDir)),
         "stale same-dir fingerprint must be pruned")
       assert(!fs.exists(new Path(wh, legacy)),
@@ -156,7 +161,6 @@ class ScaleLayoutSpec extends AnyFunSuite {
 
   test("shared layout prune covers multi-table prefixes (bm25/ivfpq families)") {
     import org.apache.hadoop.fs.Path
-    import graft.sources.Layouts
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = Layouts.dirTag(sf)
@@ -176,5 +180,31 @@ class ScaleLayoutSpec extends AnyFunSuite {
         assert(fs.exists(new Path(wh, d)), s"$d must survive")
     } finally for (d <- staleOld ++ legacyOld ++ otherDir ++ liveTables)
       fs.delete(new Path(wh, d), true)
+  }
+
+  test("a half-built multi-table layout is rebuilt, never served") {
+    // a build that stopped after its first table leaves the layout's
+    // other tables missing; the next call must rebuild, not fail on them
+    import java.nio.file.{Files, Paths}
+    import graft.similarity.Similarity
+    import graft.text.TextAnalysis
+    val tmp = Files.createTempDirectory("graft_halfbuilt_").toString
+    for (t <- Seq("documents", "embeddings"))
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$tmp/$t.parquet"))
+    val tag = s"_${Layouts.dirTag(tmp)}_"
+    def tables = spark.catalog.listTables().collect().map(_.name).filter(_.contains(tag))
+    try {
+      val bm25 = TextAnalysis.bm25Served(spark, tmp).collect().toSeq
+      val termstats = tables.filter(t => t.startsWith("graft_bm25") && t.endsWith("_termstats"))
+      assert(termstats.length === 1, tables.mkString(", "))
+      spark.sql(s"DROP TABLE `${termstats.head}`")
+      assert(TextAnalysis.bm25Served(spark, tmp).collect().toSeq === bm25,
+        "BM25 rebuilt after a missing side table")
+
+      val ann = Similarity.ivfpqServedTopK(spark, tmp).collect().toSeq
+      spark.sql(s"DROP TABLE `${Similarity.ensureIndex(spark, tmp)}_centroids`")
+      assert(Similarity.ivfpqServedTopK(spark, tmp).collect().toSeq === ann,
+        "IVFADC rebuilt after a missing side table")
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 }
