@@ -558,7 +558,7 @@ object Ellipse {
   def scoredCircles(edges: DataFrame, pixels: DataFrame, bodyMask: DataFrame,
                     h: Int, w: Int, radii: Seq[Int], voteThresh: Long): DataFrame = {
     val cands = radii.map { r =>
-      Hough.nms(Hough.votes(edges, h, w, r), voteThresh)
+      Hough.centers(edges, h, w, r, voteThresh)
         .withColumn("r", lit(r.toDouble))
     }.reduce(_ unionByName _)
       // border guard (:260): candidates too close to the frame are dropped

@@ -508,7 +508,10 @@ object Graph {
   val kCoreUnrollRounds = 10
 
   def kCoreOn(edges0: DataFrame, kk: Int = 3, maxIters: Int = 30): DataFrame = {
-    var edges = edges0.localCheckpoint()
+    // each count materializes its lazy checkpoint and carries forward
+    // as the next round's baseline: one job per round for both
+    var edges = edges0.localCheckpoint(eager = false)
+    var n = edges.count()
     var converged = false
     var round = 0
     while (!converged && round < maxIters) {
@@ -519,9 +522,11 @@ object Graph {
         .join(keep, "a")
         .join(keep.withColumnRenamed("a", "b"), "b")
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      converged = next.count() == edges.count()
+        .localCheckpoint(eager = false)
+      val m = next.count()
+      converged = m == n
       edges = next
+      n = m
     }
     require(converged, s"k-core did not converge in $maxIters rounds")
     edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** HMRF-EM volume segmentation (reference
   * Hidden_MarkovModels/brain_segmentation.py:98-318), re-expressed as
@@ -244,51 +245,72 @@ object HMRF {
     * max-shifted exactly as the reference (`:241-243`). Labels are the
     * deterministic β=0 E-step argmin from fixed literal params — the
     * SQL-expressible composition (K-means-free), same discipline as
-    * [[estepClassStatsQuery]]. Neighbor disagreement is a 4-offset
-    * equality self-join on the slice (J2); out-of-mask neighbors never
-    * join, matching the reference's in-mask counting; a pixel with no
-    * in-mask neighbors keeps prior 0 (`:236-237`).
+    * [[estepClassStatsQuery]]. The labelled slice is gathered into one
+    * [[slicePosteriors]] call, whose single output partition is sorted
+    * by (y, x) without an exchange.
     *
-    * Scale: the slice relation shuffles once on (y, x) for the
-    * neighbor counts; params are K-row literals. At volume scale this
-    * runs per-slice with the same z-bucketed layout as jacobiUpdate —
-    * no new exchange shape. Posteriors round to 4 decimals (the
-    * lmPerplexity ln/exp portability discipline). */
+    * Scale: one slice is one task. At volume scale this runs per slice
+    * with the same z-bucketed layout as jacobiUpdate; params are K-row
+    * literals. Posteriors round to 4 decimals (the lmPerplexity ln/exp
+    * portability discipline). */
   def posteriorMidQuery(spark: SparkSession, nz: Int = 16,
                         beta: Double = 1.2): DataFrame = {
     val params = Seq((0.25, 0.01), (0.5, 0.01), (0.75, 0.01))
-    val k = params.length
-    val eps9 = 1e-9
-    val labels = jacobiUpdate(phantom(spark, nz = nz), params, beta = 0.0)
+    val slice = jacobiUpdate(phantom(spark, nz = nz), params, beta = 0.0)
       .filter(col("z") === nz / 2)
       .select("y", "x", "intensity", "label")
-    val offs = Seq((1, 0), (-1, 0), (0, 1), (0, -1))
-    val shifted = labels
-      .withColumn("o", explode(array(offs.map { case (dy, dx) =>
-        struct(lit(dy).as("dy"), lit(dx).as("dx")) }: _*)))
-      .select((col("y") + col("o.dy")).as("y"),
-        (col("x") + col("o.dx")).as("x"), col("label").as("nb_label"))
-    val counts = shifted.groupBy("y", "x")
-      .agg(count(lit(1)).as("n_nb"),
-        (0 until k).map(i =>
-          sum(when(col("nb_label") === i, 1L).otherwise(0L)).as(s"c$i")): _*)
-    val lp = (0 until k).map { i =>
-      val (m, v) = params(i)
-      (lit(-0.5 * math.log(v + eps9))
-        - (col("intensity") - m) * (col("intensity") - m) * lit(0.5) / lit(v + eps9)
-        - lit(beta) * (coalesce(col("n_nb"), lit(0L)) - coalesce(col(s"c$i"), lit(0L))))
-        .as(s"lp$i")
+      .rdd.map(r => SliceVoxel(r.getInt(0), r.getInt(1), r.getDouble(2), r.getInt(3)))
+    val posts = slice.coalesce(1).mapPartitions(it =>
+      slicePosteriors(it.toArray, params, beta).iterator
+        .map(p => Row.fromSeq(Seq[Any](p.y, p.x, p.label) ++ p.post)))
+    spark.createDataFrame(posts, StructType(
+      Seq(StructField("y", IntegerType), StructField("x", IntegerType),
+        StructField("map_label", IntegerType)) ++
+        params.indices.map(i => StructField(s"post$i", DoubleType))))
+      .coalesce(1).orderBy("y", "x")
+  }
+
+  /** One labelled in-mask pixel of a slice. */
+  case class SliceVoxel(y: Int, x: Int, intensity: Double, label: Int)
+
+  /** A pixel's MAP label and per-class posteriors (rounded to 4). */
+  case class SlicePosterior(y: Int, x: Int, label: Int, post: Seq[Double])
+
+  /** The slice kernel behind [[posteriorMidQuery]]: in-mask 4-neighbor
+    * label counts on a dense grid over the slice's bounding box (a
+    * pixel with no in-mask neighbor keeps prior 0, `:236-237`), then
+    * each pixel's softmax. The arithmetic follows the relational form
+    * operation by operation: ((I − μ)·(I − μ)·0.5)/(var + 1e-9)
+    * subtracted from the −0.5·ln(var + 1e-9) literal, then
+    * β·(n − count_k); `StrictMath.exp` (what Spark's `exp` calls) of
+    * lp_k − max; the sum of the three terms plus 1e-12 left to right;
+    * Spark `round(_, 4)` as BigDecimal HALF_UP. */
+  def slicePosteriors(px: Array[SliceVoxel], params: Seq[(Double, Double)],
+                      beta: Double): Array[SlicePosterior] = {
+    if (px.isEmpty) return Array.empty
+    val eps9 = 1e-9
+    val (y0, x0) = (px.map(_.y).min, px.map(_.x).min)
+    val (gh, gw) = (px.map(_.y).max - y0 + 1, px.map(_.x).max - x0 + 1)
+    val grid = Array.fill(gh * gw)(-1)
+    px.foreach(p => grid((p.y - y0) * gw + p.x - x0) = p.label)
+    def labelAt(y: Int, x: Int): Int =
+      if (y < y0 || y >= y0 + gh || x < x0 || x >= x0 + gw) -1
+      else grid((y - y0) * gw + x - x0)
+    val emis0 = params.map { case (_, v) => -0.5 * math.log(v + eps9) }
+    px.map { p =>
+      val nb = Seq(labelAt(p.y + 1, p.x), labelAt(p.y - 1, p.x),
+        labelAt(p.y, p.x + 1), labelAt(p.y, p.x - 1)).filter(_ >= 0)
+      val lp = params.indices.map { k =>
+        val (m, v) = params(k)
+        val d = p.intensity - m
+        emis0(k) - d * d * 0.5 / (v + eps9) - beta * (nb.length - nb.count(_ == k)).toLong
+      }
+      val mx = lp.max
+      val ex = lp.map(l => StrictMath.exp(l - mx))
+      val denom = ex.reduce(_ + _) + 1e-12
+      SlicePosterior(p.y, p.x, p.label, ex.map(e =>
+        BigDecimal(e / denom).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
     }
-    val withLp = labels.join(counts, Seq("y", "x"), "left")
-      .select(Seq(col("y"), col("x"), col("label")) ++ lp: _*)
-    val mx = greatest((0 until k).map(i => col(s"lp$i")): _*)
-    val withEx = withLp
-      .select(Seq(col("y"), col("x"), col("label")) ++
-        (0 until k).map(i => exp(col(s"lp$i") - mx).as(s"ex$i")): _*)
-    val denom = (0 until k).map(i => col(s"ex$i")).reduce(_ + _) + lit(1e-12)
-    withEx.select(Seq(col("y"), col("x"), col("label").as("map_label")) ++
-      (0 until k).map(i => round(col(s"ex$i") / denom, 4).as(s"post$i")): _*)
-      .orderBy("y", "x")
   }
 
   /** Oracle-checkable slice (A10/U6/P6/W5 without the un-SQL-able

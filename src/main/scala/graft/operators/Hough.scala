@@ -1,34 +1,38 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Fixed-radius circular Hough transform (reference
   * HOUGH Transform/hough_heart_detector.py:103-157, a Python port of
-  * MATLAB houghcircle.m), re-expressed relationally:
+  * MATLAB houghcircle.m) on per-image vote grids:
   *
-  *  - U3 vote generation (`:120-140`): each edge pixel (y, x) votes for
-  *    candidate centers (round(y ± sqrt(r² − (x−x0)²)), x0) over
-  *    x0 ∈ [x−r, x+r] — an explode over the x0 range and the ± sign,
-  *    with P5 in-bounds predicates applied before aggregation. When the
-  *    vertical offset is 0 both signs land on the same cell, which
-  *    double-votes exactly like the reference's two scatter-adds.
-  *  - A9 vote accumulation (`acc[y,x] += 1`): groupBy(img, y0, x0).count
-  *    — the dense accumulator grid is never materialized.
-  *  - W3 non-maximum suppression (`:143-147`, 3×3 dilate-compare): an
-  *    8-offset neighbor self-join keeping cells ≥ their neighborhood max
-  *    (dilate == acc semantics keep ties, as the reference does).
+  *  - The (img_id, y, x) edge relation is gathered per image (one
+  *    shuffle keyed by img_id) and each image runs one plain-Scala
+  *    kernel, [[peaks]]:
+  *     - U3 vote generation (`:120-140`): each edge pixel (y, x) votes
+  *       for candidate centers (round(y ± sqrt(r² − (x−x0)²)), x0) over
+  *       x0 ∈ [x−r, x+r] inside the frame. When the vertical offset is
+  *       0 both signs land on the same cell, which double-votes exactly
+  *       like the reference's two scatter-adds.
+  *     - A9 vote accumulation (`acc[y,x] += 1`) on a dense h×w int grid.
+  *     - W3 non-maximum suppression (`:143-147`, 3×3 dilate-compare):
+  *       keep cells ≥ every 8-neighbor (cells outside the frame count
+  *       0; dilate == acc keeps ties, as the reference does) and ≥ the
+  *       vote threshold.
   *  - A14 best center (`:153-157`): per-image argmax on votes with the
   *    reference's np.where row-major tie-break → (votes desc, y0, x0).
   *
-  * Scale notes: everything is keyed by img_id first, so one early
-  * repartition co-locates a whole image's votes and the NMS join
-  * shuffles nothing across images (SURVEY §4.3 per-image locality); the
-  * vote explode multiplies rows ~2(2r+1)× but aggregates map-side.
-  * sqrt/round of integer inputs are bit-identical across engines (sqrt
-  * of an int is never exactly half-integral), so vote counts are exact
-  * integers and the DuckDB oracle hash-matches.
+  * Exactness: sqrt of an int is never exactly half-integral, and the
+  * rounding is Spark `round`'s HALF_UP, so vote counts are exact
+  * integers and the DuckDB oracle (which replays the vote explode, the
+  * count and the 8-offset neighbor join in SQL) hash-matches.
+  *
+  * Scale notes: an image's votes never leave its task, so the only
+  * exchange is the edge pixels' shuffle by img_id; the grid is h·w ints
+  * per image in flight.
   */
 object Hough {
 
@@ -47,50 +51,78 @@ object Hough {
         + (col("x") - col("cx")) * (col("x") - col("cx"))) - r) < 0.5)
       .select("img_id", "y", "x")
 
-  /** U3/A9 — vote accumulation for one fixed radius over an
-    * (img_id, y, x) edge relation. */
-  def votes(edges: DataFrame, h: Int, w: Int, r: Int): DataFrame =
-    edges
-      .withColumn("x0", explode(sequence(
-        greatest(lit(0), col("x") - r), least(lit(w - 1), col("x") + r))))
-      .withColumn("dy_sq", lit(r * r) - (col("x") - col("x0")) * (col("x") - col("x0")))
-      .filter(col("dy_sq") >= 0)
-      .withColumn("sgn", explode(array(lit(-1.0), lit(1.0))))
-      .withColumn("y0", round(col("y") + col("sgn") * sqrt(col("dy_sq"))).cast("int"))
-      .filter(col("y0") >= 0 && col("y0") < h)
-      .groupBy("img_id", "y0", "x0")
-      .agg(count(lit(1)).as("votes"))
-
-  /** W3 — 3×3 local-maxima NMS + vote threshold: keep cells whose votes
-    * are >= every 8-neighbor's votes and >= thresh. */
-  def nms(acc: DataFrame, thresh: Long): DataFrame = {
-    val offsets = for (dy <- -1 to 1; dx <- -1 to 1 if dy != 0 || dx != 0) yield (dy, dx)
-    val shifted = acc.withColumn("o", explode(array(offsets.map { case (dy, dx) =>
-        struct(lit(dy).as("dy"), lit(dx).as("dx")) }: _*)))
-      .select(col("img_id"),
-        (col("y0") + col("o.dy")).as("y0"), (col("x0") + col("o.dx")).as("x0"),
-        col("votes").as("nb_votes"))
-    acc.join(shifted, Seq("img_id", "y0", "x0"), "left")
-      .groupBy("img_id", "y0", "x0", "votes")
-      .agg(max(coalesce(col("nb_votes"), lit(0L))).as("nb_max"))
-      .filter(col("votes") >= col("nb_max") && col("votes") >= thresh)
-      .select("img_id", "y0", "x0", "votes")
+  /** Spark `round(v)` on a double: HALF_UP, ties away from zero. */
+  private def roundHalfUp(v: Double): Long = {
+    val a = math.abs(v)
+    val f = math.floor(a)
+    val m = if (a - f >= 0.5) f + 1 else f
+    (if (v < 0) -m else m).toLong
   }
 
-  /** A14 — strongest surviving center per image; ties break row-major
-    * (y0, x0) like np.argmax over np.where output. */
-  def bestCircle(kept: DataFrame): DataFrame = {
-    val w = Window.partitionBy("img_id").orderBy(col("votes").desc, col("y0"), col("x0"))
-    kept.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("img_id", "y0", "x0", "votes")
+  /** U3/A9/W3 — the per-image kernel: votes of the edge pixels
+    * (ys(i), xs(i)) for radius `r` on an h×w grid, then the 3×3 NMS and
+    * the `thresh` cut. Returns the kept (y0, x0, votes) cells in
+    * row-major order; a cell without votes is never kept. */
+  def peaks(ys: Array[Int], xs: Array[Int], h: Int, w: Int, r: Int,
+            thresh: Long): Seq[(Int, Int, Long)] = {
+    val acc = new Array[Int](h * w)
+    def vote(y0: Long, x0: Int): Unit = if (y0 >= 0 && y0 < h) acc(y0.toInt * w + x0) += 1
+    var i = 0
+    while (i < ys.length) {
+      val (y, x) = (ys(i), xs(i))
+      var x0 = math.max(0, x - r)
+      while (x0 <= math.min(w - 1, x + r)) {
+        val s = math.sqrt((r * r - (x - x0) * (x - x0)).toDouble)
+        vote(roundHalfUp(y - s), x0)
+        vote(roundHalfUp(y + s), x0)
+        x0 += 1
+      }
+      i += 1
+    }
+    for {
+      y0 <- 0 until h
+      x0 <- 0 until w
+      v = acc(y0 * w + x0)
+      if v > 0 && v >= thresh && (for (ny <- y0 - 1 to y0 + 1; nx <- x0 - 1 to x0 + 1
+        if ny >= 0 && ny < h && nx >= 0 && nx < w) yield acc(ny * w + nx)).forall(_ <= v)
+    } yield (y0, x0, v.toLong)
   }
+
+  /** Runs `kernel` once per image over that image's edge pixels and
+    * returns its rows as (img_id, y0, x0, votes); img_id keeps the
+    * edge relation's type. */
+  private def perImage(edges: DataFrame)(
+      kernel: (Array[Int], Array[Int]) => Seq[(Int, Int, Long)]): DataFrame = {
+    val byImage = edges.select(col("img_id"), col("y").cast("int"), col("x").cast("int"))
+      .rdd.map(r => r.get(0) -> ((r.getInt(1), r.getInt(2))))
+      .groupByKey()
+      .flatMap { case (img, px) =>
+        val (ys, xs) = px.toArray.unzip
+        kernel(ys, xs).map { case (y0, x0, v) => Row(img, y0, x0, v) }
+      }
+    edges.sparkSession.createDataFrame(byImage, StructType(Seq(
+      edges.schema("img_id"), StructField("y0", IntegerType), StructField("x0", IntegerType),
+      StructField("votes", LongType, nullable = false))))
+  }
+
+  /** U3/A9/W3 — every NMS survivor with at least `thresh` votes, per
+    * image: (img_id, y0, x0, votes). */
+  def centers(edges: DataFrame, h: Int, w: Int, r: Int, thresh: Long): DataFrame =
+    perImage(edges)(peaks(_, _, h, w, r, thresh))
+
+  /** A14 — the strongest surviving center per image; ties break
+    * row-major (y0, x0) like np.argmax over np.where output. An image
+    * with no survivor has no row. */
+  def bestCircles(edges: DataFrame, h: Int, w: Int, r: Int, thresh: Long): DataFrame =
+    perImage(edges) { (ys, xs) =>
+      peaks(ys, xs, h, w, r, thresh).reduceLeftOption((a, b) => if (b._3 > a._3) b else a).toSeq
+    }
 
   /** End-to-end query: synthetic edges → votes → NMS → best center per
     * image (thresh follows the reference's acc_thresh default scaled to
     * the synthetic ring). */
   def bestCircleQuery(spark: SparkSession): DataFrame =
-    bestCircle(nms(votes(syntheticEdges(spark), h = 96, w = 96, r = 20), thresh = 12L))
-      .orderBy("img_id")
+    bestCircles(syntheticEdges(spark), h = 96, w = 96, r = 20, thresh = 12L).orderBy("img_id")
 
   /** U7 — candidate scoring with bilinear sampling (reference detector
     * 2, hough_heart_detector2.py:137-213): sample nSamples perimeter

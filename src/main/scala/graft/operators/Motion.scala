@@ -47,9 +47,10 @@ object Motion {
     * velocity expression (position before this frame's step, matching
     * the generator loop order). `textured` adds a deterministic
     * (x*7 + y*13 + frame*31) % 17 pattern so block SADs have unique
-    * minima and compensation error is nonzero. The clip is a few dozen
-    * frames, so it is rendered once, in the calling JVM, into a local
-    * relation; building the DataFrame runs no job. */
+    * minima and compensation error is nonzero. The calling JVM keeps
+    * only the square's per-frame positions (the velocity prefix sums);
+    * the frames are rendered inside a task from `spark.range(nFrames)`,
+    * one task for the whole clip (a few dozen frames). */
   def syntheticVideo(spark: SparkSession, nFrames: Int, h: Int, w: Int,
                      square: Int, vx: Column, vy: Column, textured: Boolean,
                      startX: Int = 30, startY: Int = 40): DataFrame = {
@@ -58,11 +59,11 @@ object Motion {
     // evaluating the velocity expressions runs no job
     val vel = (0 until nFrames).toDF("frame_idx")
       .select(col("frame_idx"), vx.cast("long"), vy.cast("long"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val x0s = vel.scanLeft(startX.toLong)(_ + _._2)
-    val y0s = vel.scanLeft(startY.toLong)(_ + _._3)
-    vel.indices.map { i =>
-      val (f, x0, y0) = (vel(i)._1, x0s(i).toInt, y0s(i).toInt)
+      .collect().sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(2)))
+    val x0s = vel.scanLeft(startX.toLong)(_ + _._1).map(_.toInt)
+    val y0s = vel.scanLeft(startY.toLong)(_ + _._2).map(_.toInt)
+    spark.range(0, nFrames, 1, 1).map { id =>
+      val (f, x0, y0) = (id.toInt, x0s(id.toInt), y0s(id.toInt))
       f -> Array.tabulate(h * w) { pos =>
         val y = pos / w
         val x = pos % w

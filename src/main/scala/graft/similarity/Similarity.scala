@@ -1,8 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.Tables
 import graft.sources.Layouts
 import graft.functions.VectorExpressions
@@ -320,9 +322,9 @@ object Similarity {
     // broadcast-join det rung at the same scale). The join form keeps
     // the identical math — same sequential-fold distances, min
     // (d, list_id) ≡ first-min tie-break — in a codegen'd hash join
-    // plus a two-scalar argmin aggregation (the assignToCentroids
-    // discipline: the n×nlist joined rows reduce to two scalars
-    // before the argmin, never carrying the vector payload).
+    // plus a two-scalar argmin aggregation (the n×nlist joined rows
+    // reduce to two scalars before the argmin, never carrying the
+    // vector payload).
     import spark.implicits._
     val centDf = cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "cv")
@@ -1293,115 +1295,140 @@ object Similarity {
   //    integers → one correctly-rounded IEEE result), re-rounded to
   //    micros; empty clusters keep their previous centroid.
   //
-  // Scale: the global init rank is the packSequences two-phase scan
-  // (parallel per-partition row_number + broadcast base offsets —
-  // never a single-partition window); each Lloyd round is one
-  // broadcast nested-loop assignment scan (k centroid rows) and one
-  // (cluster, pos) sum shuffle of integer scalars; rounds are bounded
-  // (`iters`), lineage truncated per round. Fixed k=8/iters=2 at the
-  // gate is the oracle-able resolution (the emb_lsh_topk rule: only
-  // FIXED resolutions get literal-replay oracles); at corpus scale
-  // callers pass k ≈ √n and more rounds.
+  // Scale: the quantized corpus is range-sorted by vec_id once (a
+  // local checkpoint truncates its lineage) and never leaves the
+  // executors. Seeding is one per-partition count plus one pass picking
+  // the strided ranks, so only the k seed vectors reach the driver;
+  // each Lloyd round is one treeAggregate of per-cluster int64 sums and
+  // counts against the broadcast centroids (the spark.ml KMeans shape),
+  // so the driver receives k×d sums per round. Rounds are bounded
+  // (`iters`). Fixed k=8/iters=2 at the gate is the oracle-able
+  // resolution (the emb_lsh_topk rule: only FIXED resolutions get
+  // literal-replay oracles); at corpus scale callers pass k ≈ √n and
+  // more rounds.
 
   private def quantizeMicros(all: DataFrame): DataFrame =
     all.select(col("vec_id"),
       transform(col("vec"), x => floor(x * lit(1e6) + lit(0.5))).as("mv"))
 
-  /** k strided-rank seed centroids (cluster_id, cv): the vectors at
-    * global vec_id-order ranks 0, s, 2s, … with s = n div k. */
-  private def stridedInit(withM: DataFrame, k: Int): DataFrame = {
-    val spark = withM.sparkSession
-    // LAZY checkpoint (round 20, VERDICT item 5): the counts collect
-    // below is the first action over `local` and computes EVERY
-    // partition (a full groupBy), so it materializes the checkpoint as
-    // a side effect — the old eager form paid a separate
-    // materialization job first. The checkpoint itself is still what
-    // pins the range partitioning: both consumers (the counts pull and
-    // the seed join) must see the identical pid/lrn assignment.
-    val local = withM
-      .repartitionByRange(col("vec_id"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn",
-        row_number().over(Window.partitionBy("pid").orderBy("vec_id")).cast("long"))
-      .localCheckpoint(eager = false)
-    val counts = local.groupBy("pid").agg(count(lit(1)).as("pcnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    val stride = math.max(1L, n / k)
-    val bases = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-      .tail.zip(counts).map { case ((pid, after), (_, c)) => (pid, after - c) }
-    val baseDf = spark.createDataFrame(bases.toSeq).toDF("pid", "base")
-    local.join(broadcast(baseDf), Seq("pid"))
-      .withColumn("rn", col("base") + col("lrn"))
-      .filter(((col("rn") - 1) % stride) === 0)
-      .withColumn("cluster_id", ((col("rn") - 1) / stride).cast("int"))
-      .filter(col("cluster_id") < k)
-      .select(col("cluster_id"), col("mv").as("cv"))
+  /** The assignment rule of every deterministic-k-means caller: the
+    * centroid with the least int64 squared L2 distance Σ(m − c)², ties
+    * to the lowest cluster_id (the array index). */
+  private[graft] def nearest(m: Array[Long], cent: Array[Array[Long]]): Int = {
+    var (best, bestD) = (-1, Long.MaxValue)
+    var c = 0
+    while (c < cent.length) {
+      val cv = cent(c)
+      require(cv.length == m.length, s"vector of ${m.length} elements vs centroid of ${cv.length}")
+      var (d, j) = (0L, 0)
+      while (j < m.length) {
+        val e = m(j) - cv(j)
+        d += e * e
+        j += 1
+      }
+      if (best < 0 || d < bestD) { best = c; bestD = d }
+      c += 1
+    }
+    best
   }
 
-  /** One assignment pass: nearest centroid by integer squared L2,
-    * ties to the lowest cluster_id. Output (vec_id, cluster_id) ONLY —
-    * the n×k joined rows reduce to two scalars before the argmin
-    * aggregation, so the agg buffer never carries the vector payload
-    * (carrying mv through first() tripled wall time at k ≈ 2√n). */
-  private def assignToCentroids(withM: DataFrame, cent: DataFrame): DataFrame =
-    withM.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cluster_id"), aggregate(
-        zip_with(col("mv"), col("cv"), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x).as("d"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d"), col("cluster_id"))).as("best"))
-      .select(col("vec_id"), col("best.cluster_id").as("cluster_id"))
+  /** Lloyd state: the quantized corpus (vec_id, micros) sorted by vec_id
+    * and checkpointed, and the centroids (cluster_id = index). */
+  private case class Lloyd(spark: SparkSession, points: RDD[(Long, Array[Long])],
+                           cent: Array[Array[Long]])
 
-  /** One Lloyd update: element-wise integer mean per cluster, rounded
-    * back to micros; clusters that lost every member keep `prev`. The
-    * vectors re-attach by an n-row equality join on vec_id — cheaper
-    * than carrying them through the assignment argmin. */
-  private def updateCentroids(withM: DataFrame, assigned: DataFrame,
-                              prev: DataFrame): DataFrame = {
-    val fresh = assigned.join(withM, Seq("vec_id"))
-      .select(col("cluster_id"), posexplode(col("mv")).as(Seq("pos", "v")))
-      .groupBy("cluster_id", "pos")
-      .agg(sum("v").as("sm"), count(lit(1)).as("cnt"))
-      .select(col("cluster_id"), col("pos"),
-        floor(col("sm").cast("double") / col("cnt").cast("double") + lit(0.5)).as("cd"))
-      .groupBy("cluster_id")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cd")))),
-        s => s.getField("cd")).as("cvf"))
-    prev.join(fresh, Seq("cluster_id"), "left")
-      .select(col("cluster_id"), coalesce(col("cvf"), col("cv")).as("cv"))
+  /** The k strided-rank seeds: the vectors at global vec_id-order ranks
+    * 0, s, 2s, … with s = max(1, n div k) — k of them, or n when n < k.
+    * One pass counts each partition of the sorted points (and
+    * materializes their checkpoint), one picks the ranks. */
+  private def stridedSeeds(points: RDD[(Long, Array[Long])], k: Int): Array[Array[Long]] = {
+    val counts = points.mapPartitions(it => Iterator(it.size.toLong)).collect()
+    val stride = math.max(1L, counts.sum / k)
+    val bases = counts.scanLeft(0L)(_ + _)
+    points.mapPartitionsWithIndex { (pid, it) =>
+      it.zipWithIndex.map { case ((_, mv), i) => (bases(pid) + i, mv) }
+        .collect { case (rn, mv) if rn % stride == 0 && rn / stride < k => (rn / stride, mv) }
+    }.collect().sortBy(_._1).map(_._2)
   }
+
+  /** One Lloyd round's statistics against `cent`: per-cluster int64
+    * element sums and member counts, combined by treeAggregate. */
+  private def lloydStats(l: Lloyd): (Array[Array[Long]], Array[Long]) = {
+    val bc = l.points.sparkContext.broadcast(l.cent)
+    val (k, d) = (l.cent.length, l.cent.headOption.map(_.length).getOrElse(0))
+    try l.points.treeAggregate((Array.ofDim[Long](k, d), new Array[Long](k)))(
+      { case ((sums, counts), (_, mv)) =>
+        val c = nearest(mv, bc.value)
+        var j = 0
+        while (j < d) { sums(c)(j) += mv(j); j += 1 }
+        counts(c) += 1
+        (sums, counts)
+      },
+      { case ((s1, c1), (s2, c2)) =>
+        for (c <- 0 until k) {
+          for (j <- 0 until d) s1(c)(j) += s2(c)(j)
+          c1(c) += c2(c)
+        }
+        (s1, c1)
+      })
+    finally bc.destroy()
+  }
+
+  /** Strided seed plus `iters − 1` Lloyd updates: each element of a new
+    * centroid is floor(sum / cnt + 0.5) over its members' micros (two
+    * exactly representable integers, one correctly rounded division);
+    * a cluster that lost every member keeps its previous centroid. */
+  private def lloyd(all: DataFrame, k: Int, iters: Int): Lloyd = {
+    require(k >= 1 && iters >= 1, s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
+    val points = quantizeMicros(all).rdd
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .sortByKey().localCheckpoint()
+    var l = Lloyd(all.sparkSession, points, stridedSeeds(points, k))
+    for (_ <- 1 until iters) {
+      val (sums, counts) = lloydStats(l)
+      l = l.copy(cent = l.cent.indices.map { c =>
+        if (counts(c) == 0) l.cent(c)
+        else sums(c).map(sm => math.floor(sm.toDouble / counts(c).toDouble + 0.5).toLong)
+      }.toArray)
+    }
+    l
+  }
+
+  /** (vec_id, cluster_id) of every point under the state's centroids,
+    * plus `cluster_n` when `sizes` (members per cluster) is given. */
+  private def assignments(l: Lloyd, sizes: Option[Array[Long]] = None): DataFrame = {
+    val bc = l.spark.sparkContext.broadcast(l.cent)
+    val rows = l.points.map { case (id, mv) =>
+      val c = nearest(mv, bc.value)
+      Row.fromSeq(Seq[Any](id, c) ++ sizes.map(_(c)))
+    }
+    l.spark.createDataFrame(rows, StructType(
+      Seq(StructField("vec_id", LongType), StructField("cluster_id", IntegerType)) ++
+        sizes.map(_ => StructField("cluster_n", LongType, nullable = false))))
+  }
+
+  /** (cluster_id, cv) of a state's centroids, a local relation. */
+  private def centroidTable(l: Lloyd): DataFrame =
+    l.spark.createDataFrame(l.cent.toSeq.zipWithIndex.map(_.swap))
+      .toDF("cluster_id", "cv")
 
   /** Centroids after `iters − 1` Lloyd updates from the strided seed —
     * exactly the table the final assignment pass reads. */
-  def kmeansCentroidsDet(all: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
-    require(k >= 1 && iters >= 1, s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
-    // lazy: materialized by stridedInit's counts collect (its first
-    // full-partition action) together with the strided-rank relation —
-    // one seeding job total instead of three (round 20, VERDICT item 5)
-    val withM = quantizeMicros(all).localCheckpoint(eager = false)
-    var cent = stridedInit(withM, k).localCheckpoint()
-    for (_ <- 1 until iters)
-      cent = updateCentroids(withM, assignToCentroids(withM, cent), cent)
-        .localCheckpoint()
-    cent
-  }
+  def kmeansCentroidsDet(all: DataFrame, k: Int = 8, iters: Int = 2): DataFrame =
+    centroidTable(lloyd(all, k, iters))
 
   /** Final deterministic assignment (vec_id, cluster_id) after
     * `iters` assignment rounds with Lloyd updates in between. */
   def kmeansAssignOn(all: DataFrame, k: Int = 8, iters: Int = 2): DataFrame =
-    assignToCentroids(quantizeMicros(all), kmeansCentroidsDet(all, k, iters))
+    assignments(lloyd(all, k, iters))
 
   /** Gate query: per-vector cluster assignment plus the size of the
-    * assigned cluster — (vec_id, cluster_id, cluster_n). */
+    * assigned cluster — (vec_id, cluster_id, cluster_n); the sizes are
+    * the counts of the final assignment round's statistics. */
   def kmeansClusters(spark: SparkSession, dir: String,
                      k: Int = 8, iters: Int = 2): DataFrame = {
-    val assign = kmeansAssignOn(corpus(spark, dir), k, iters)
-      .select("vec_id", "cluster_id")
-    val sizes = assign.groupBy("cluster_id").agg(count(lit(1)).as("cluster_n"))
-    assign.join(broadcast(sizes), Seq("cluster_id"))
-      .select(col("vec_id"), col("cluster_id"), col("cluster_n"))
-      .orderBy("vec_id")
+    val l = lloyd(corpus(spark, dir), k, iters)
+    assignments(l, Some(lloydStats(l)._2)).orderBy("vec_id")
   }
 
   /** SemDeDup keep-list: the semanticKeepOn decision computed from
@@ -1725,9 +1752,10 @@ object Similarity {
   def ivfDetTopKOn(all: DataFrame, nQueries: Int = 5, k: Int = 3,
                    nlist: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
     VectorExpressions.register(all.sparkSession)
-    val cent = kmeansCentroidsDet(all, nlist, iters).localCheckpoint()
+    val l = lloyd(all, nlist, iters)
+    val cent = centroidTable(l)
     val withM = quantizeMicros(all)
-    val assigned = assignToCentroids(withM, cent)
+    val assigned = assignments(l)
       .select(col("vec_id").as("cand_id"), col("cluster_id").as("list_id"))
       .join(all.select(col("vec_id").as("cand_id"), col("vec").as("cv"),
         col("norm").as("cn")), Seq("cand_id"))

@@ -58,12 +58,24 @@ object Layouts {
     val samedir = s"${base}_${dirTag(dir)}_"
     val legacy = java.util.regex.Pattern.compile(
       java.util.regex.Pattern.quote(base) + "_[0-9a-f]{10}(_[a-z]+)?")
+    drop(spark)(n => !n.startsWith(keepPrefix) &&
+      (n.startsWith(samedir) || legacy.matcher(n).matches()))
+  }
+
+  /** Drop every layout built from `dir`, whatever its base: the tables
+    * and their warehouse dirs. For a source dir that is going away (a
+    * scratch dir), whose tag `pruneStale` would never match again. */
+  def dropAll(spark: SparkSession, dir: String): Unit =
+    drop(spark)(_.contains(s"_${dirTag(dir)}_"))
+
+  /** Drop the catalog table (if live) and the warehouse dir of every
+    * warehouse entry whose name is `doomed`. */
+  private def drop(spark: SparkSession)(doomed: String => Boolean): Unit = {
     val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
     val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
       val n = st.getPath.getName
-      if (!n.startsWith(keepPrefix) &&
-          (n.startsWith(samedir) || legacy.matcher(n).matches())) {
+      if (doomed(n)) {
         if (spark.catalog.tableExists(n)) spark.sql(s"DROP TABLE IF EXISTS `$n`")
         fs.delete(st.getPath, true)
       }

@@ -59,7 +59,7 @@ class EndToEndSpec extends AnyFunSuite {
         (col("i") % w).cast("int").as("x"), col("v"))
     val edges = Canny.canny(pixels, h, w, low = 100, high = 400)
       .select("img_id", "y", "x")
-    val best = Hough.bestCircle(Hough.nms(Hough.votes(edges, h, w, r), thresh = 12L))
+    val best = Hough.bestCircles(edges, h, w, r, thresh = 12L)
       .collect().map(r0 => r0.getAs[Int]("img_id") ->
         (r0.getAs[Int]("y0"), r0.getAs[Int]("x0"))).toMap
     centers.foreach { case (k, cy, cx) =>

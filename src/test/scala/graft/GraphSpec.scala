@@ -12,6 +12,17 @@ class GraphSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf0001}
   import spark.implicits._
 
+  /** Runs `body` on a fresh temp source dir, then drops every layout
+    * built from it (tables and warehouse dirs) and the dir itself. */
+  private def withScratchDir(prefix: String)(body: String => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(tmp)
+    finally {
+      graft.sources.Layouts.dropAll(spark, tmp)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
+  }
+
   test("pageRank conserves probability mass and ranks hubs first") {
     val pr = Graph.pageRank(spark, sf0001).collect()
     // Σ pr = 1 → mean of (pr·N) = 1 exactly (up to the 1e-6 rounding)
@@ -58,11 +69,12 @@ class GraphSpec extends AnyFunSuite {
       (oa, 1L), (oa, 2L), (oa, 3L),
       (ob, 2L), (ob, 3L), (ob, 4L), (ob, 5L))
       .toDF("l_orderkey", "l_partkey")
-    val tmp = java.nio.file.Files.createTempDirectory("graphspec").toString
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val row = Graph.triangleCount(spark, tmp).head()
-    assert(row.getAs[Long]("n_edges") === 8L)     // 3 + C(4,2)=6, minus shared {2,3}
-    assert(row.getAs[Long]("n_triangles") === 5L)
+    withScratchDir("graphspec") { tmp =>
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      val row = Graph.triangleCount(spark, tmp).head()
+      assert(row.getAs[Long]("n_edges") === 8L)     // 3 + C(4,2)=6, minus shared {2,3}
+      assert(row.getAs[Long]("n_triangles") === 5L)
+    }
   }
 
   test("label propagation splits bridged cliques into their two communities") {
@@ -148,14 +160,15 @@ class GraphSpec extends AnyFunSuite {
       (oa, 1L), (oa, 2L), (oa, 3L),
       (ob, 3L), (ob, 4L), (ob, 5L))
       .toDF("l_orderkey", "l_partkey")
-    val tmp = java.nio.file.Files.createTempDirectory("ccspec").toString
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val out = Graph.clusteringCoefficient(spark, tmp).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    for (n <- Seq(1L, 2L, 4L, 5L))
-      assert(out(n) === ((2L, 1L, 1.0)), s"leaf-of-triangle $n: ${out(n)}")
-    assert(out(3L)._1 === 4L && out(3L)._2 === 2L, s"shared node: ${out(3L)}")
-    assert(math.abs(out(3L)._3 - 1.0 / 3.0) < 1e-6, s"broker cc: ${out(3L)}")
+    withScratchDir("ccspec") { tmp =>
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      val out = Graph.clusteringCoefficient(spark, tmp).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+      for (n <- Seq(1L, 2L, 4L, 5L))
+        assert(out(n) === ((2L, 1L, 1.0)), s"leaf-of-triangle $n: ${out(n)}")
+      assert(out(3L)._1 === 4L && out(3L)._2 === 2L, s"shared node: ${out(3L)}")
+      assert(math.abs(out(3L)._3 - 1.0 / 3.0) < 1e-6, s"broker cc: ${out(3L)}")
+    }
   }
 
   test("3-core keeps exactly the K4 and peels the pendant chain layer by layer") {
@@ -227,18 +240,19 @@ class GraphSpec extends AnyFunSuite {
       (oa, 1L, 1L), (oa, 2L, 1L),
       (ob, 3L, 2L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey")
-    val tmp = java.nio.file.Files.createTempDirectory("ccspec").toString
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    def components() = Graph.connectedComponents(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val want = Set(
-      ("p:1", "p:1"), ("p:2", "p:1"), ("s:1", "p:1"),
-      ("p:3", "p:3"), ("s:2", "p:3"))
-    assert(components() === want)
-    // a zero one-task budget forces the iterative labelGraph rounds
-    spark.conf.set("graft.components.localEdgeBudget", "0")
-    try assert(components() === want, "iterative path")
-    finally spark.conf.unset("graft.components.localEdgeBudget")
+    withScratchDir("ccspec") { tmp =>
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      def components() = Graph.connectedComponents(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      val want = Set(
+        ("p:1", "p:1"), ("p:2", "p:1"), ("s:1", "p:1"),
+        ("p:3", "p:3"), ("s:2", "p:3"))
+      assert(components() === want)
+      // a zero one-task budget forces the iterative labelGraph rounds
+      spark.conf.set("graft.components.localEdgeBudget", "0")
+      try assert(components() === want, "iterative path")
+      finally spark.conf.unset("graft.components.localEdgeBudget")
+    }
   }
 
   test("bfsHops walks a path graph to exactly the hop bound") {
@@ -246,15 +260,16 @@ class GraphSpec extends AnyFunSuite {
     val li = Seq(
       (1L, 1L, 1L), (2L, 1L, 2L), (3L, 2L, 2L), (4L, 2L, 3L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey")
-    val tmp = java.nio.file.Files.createTempDirectory("bfsspec").toString
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val d4 = Graph.bfsHops(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(d4 === Map("s:1" -> 0, "p:1" -> 1, "s:2" -> 2, "p:2" -> 3, "s:3" -> 4))
-    // a tighter bound truncates the frontier, not just the labels
-    val d2 = Graph.bfsHops(spark, tmp, hops = 2).collect()
-      .map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(d2 === Map("s:1" -> 0, "p:1" -> 1, "s:2" -> 2))
+    withScratchDir("bfsspec") { tmp =>
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      val d4 = Graph.bfsHops(spark, tmp).collect()
+        .map(r => (r.getString(0), r.getInt(1))).toMap
+      assert(d4 === Map("s:1" -> 0, "p:1" -> 1, "s:2" -> 2, "p:2" -> 3, "s:3" -> 4))
+      // a tighter bound truncates the frontier, not just the labels
+      val d2 = Graph.bfsHops(spark, tmp, hops = 2).collect()
+        .map(r => (r.getString(0), r.getInt(1))).toMap
+      assert(d2 === Map("s:1" -> 0, "p:1" -> 1, "s:2" -> 2))
+    }
   }
 
   test("incremental MV merge equals the from-scratch aggregate") {
@@ -269,19 +284,14 @@ class GraphSpec extends AnyFunSuite {
     check(sf0001)
     // orders.parquet rewritten in place within one session: the base
     // partials of the previous rows must not be merged with the new delta
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mv_").toString
     val orders = graft.Tables(spark, sf0001, "orders")
       .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-    try {
+    withScratchDir("graft_mv_") { tmp =>
       orders.write.parquet(s"$tmp/orders.parquet")
       check(tmp)
       orders.filter(pmod(col("o_custkey"), lit(2)) === 0)
         .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
       check(tmp)
-    } finally {
-      val tag = s"graft_mv_rev_${graft.sources.Layouts.dirTag(tmp)}_"
-      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(tag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
 

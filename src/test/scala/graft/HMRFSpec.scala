@@ -101,6 +101,72 @@ class HMRFSpec extends AnyFunSuite {
     post.unpersist()
   }
 
+  private val sliceParams = Seq((0.25, 0.01), (0.5, 0.01), (0.75, 0.01))
+
+  /** The relational slice posterior, kept as the kernel's verification
+    * plan: a 4-offset neighbor explode grouped by (y, x) for the
+    * in-mask neighbor counts, left-joined back to the labelled slice
+    * (y, x, intensity, label), then the softmax as column arithmetic.
+    * Returns (y, x, map_label, post0..post2). */
+  private def relationalPosterior(labels: org.apache.spark.sql.DataFrame,
+                                  beta: Double): org.apache.spark.sql.DataFrame = {
+    val (k, eps9) = (sliceParams.length, 1e-9)
+    val offs = Seq((1, 0), (-1, 0), (0, 1), (0, -1))
+    val counts = labels
+      .withColumn("o", explode(array(offs.map { case (dy, dx) =>
+        struct(lit(dy).as("dy"), lit(dx).as("dx")) }: _*)))
+      .select((col("y") + col("o.dy")).as("y"),
+        (col("x") + col("o.dx")).as("x"), col("label").as("nb_label"))
+      .groupBy("y", "x")
+      .agg(count(lit(1)).as("n_nb"),
+        (0 until k).map(i =>
+          sum(when(col("nb_label") === i, 1L).otherwise(0L)).as(s"c$i")): _*)
+    val lp = (0 until k).map { i =>
+      val (m, v) = sliceParams(i)
+      (lit(-0.5 * math.log(v + eps9))
+        - (col("intensity") - m) * (col("intensity") - m) * lit(0.5) / lit(v + eps9)
+        - lit(beta) * (coalesce(col("n_nb"), lit(0L)) - coalesce(col(s"c$i"), lit(0L))))
+        .as(s"lp$i")
+    }
+    val withLp = labels.join(counts, Seq("y", "x"), "left")
+      .select(Seq(col("y"), col("x"), col("label")) ++ lp: _*)
+    val mx = greatest((0 until k).map(i => col(s"lp$i")): _*)
+    val withEx = withLp.select(Seq(col("y"), col("x"), col("label")) ++
+      (0 until k).map(i => exp(col(s"lp$i") - mx).as(s"ex$i")): _*)
+    val denom = (0 until k).map(i => col(s"ex$i")).reduce(_ + _) + lit(1e-12)
+    withEx.select(Seq(col("y"), col("x"), col("label").as("map_label")) ++
+      (0 until k).map(i => round(col(s"ex$i") / denom, 4).as(s"post$i")): _*)
+      .orderBy("y", "x")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+
+  test("posterior kernel matches the relational plan on the phantom mid slice") {
+    val slice = HMRF.jacobiUpdate(HMRF.phantom(spark), sliceParams, beta = 0.0)
+      .filter(col("z") === 8).select("y", "x", "intensity", "label")
+    for (beta <- Seq(0.0, 1.2, 3.5)) {
+      val got = rowsOf(HMRF.posteriorMidQuery(spark, beta = beta))
+      assert(got.nonEmpty)
+      assert(got === rowsOf(relationalPosterior(slice, beta)), s"beta=$beta")
+    }
+  }
+
+  test("a slice voxel with no in-mask neighbors keeps prior 0") {
+    import spark.implicits._
+    // (0,0) and (5,5) are isolated (n_nb = 0); (2,2)-(2,3) are a pair
+    val px = Seq((0, 0, 0.3, 0), (5, 5, 0.52, 1), (2, 2, 0.74, 2), (2, 3, 0.26, 0))
+    val slice = px.toDF("y", "x", "intensity", "label")
+    val got = HMRF.slicePosteriors(
+      px.map { case (y, x, i, l) => HMRF.SliceVoxel(y, x, i, l) }.toArray, sliceParams, 1.2)
+      .sortBy(p => (p.y, p.x)).map(p => Seq(p.y, p.x, p.label) ++ p.post).toSeq
+    assert(got === rowsOf(relationalPosterior(slice, 1.2)))
+    // an isolated voxel's posterior is the prior-free (beta = 0) one
+    val free = HMRF.slicePosteriors(Array(HMRF.SliceVoxel(0, 0, 0.3, 0)), sliceParams, 0.0)
+    assert(got.head === (Seq(0, 0, 0) ++ free.head.post))
+    assert(HMRF.slicePosteriors(Array.empty, sliceParams, 1.2).isEmpty)
+  }
+
   test("m-step falls back to global median/var for starved classes") {
     import spark.implicits._
     // class 2 has only 3 voxels -> fallback kicks in
